@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_table
+
 _SEEDS = (41, 59, 97, 131)
 
 
@@ -120,9 +122,7 @@ def with_bloom_probe(
     key = F.col(key_col).cast("string")
     if len(words) <= _LITERAL_WORDS_MAX:
         return df.withColumn(out_col, _probe_expr(key, F.lit(words), num_bits, k))
-    wdf = df.sparkSession.createDataFrame(
-        [(words,)], "_bloom_words: array<long>"
-    )
+    wdf = local_table(df.sparkSession, [(words,)], "_bloom_words: array<long>")
     return (
         df.join(F.broadcast(wdf))
         .withColumn(out_col, _probe_expr(key, F.col("_bloom_words"), num_bits, k))

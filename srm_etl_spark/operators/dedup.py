@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..functions.text import normalized_text, tokens, word_shingles
+from ..sources.tables import local_table
 from .session_cache import keep_persisted
 
 
@@ -505,7 +506,7 @@ def _jaccard_pairs_bitmap(
                 StructField("jaccard", DoubleType()),
             ]
         )
-        return toks.sparkSession.createDataFrame([], empty_schema)
+        return local_table(toks.sparkSession, [], empty_schema)
     n_words = max(1, math.ceil(n_vocab / 64))
     vid = vocab.withColumn("_vid", F.row_number().over(Window.orderBy("_tok")) - 1)
     # one plain LONG column per 64-vocab word — the hot per-pair expression

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_table
+
 
 def dot(a: Column, b: Column) -> Column:
     """Σ a_i * b_i via zip_with + aggregate — JVM-side, no UDF."""
@@ -471,7 +473,8 @@ def assign_clusters(
     if ASSIGN_LARGE_K_MODE == "hierarchical":
         return _assign_hierarchical(df, items, vec_col)
     spark = df.sparkSession
-    cent = spark.createDataFrame(
+    cent = local_table(
+        spark,
         [([cid for cid, _ in items], [c for _, c in items])],
         "_cids: array<int>, _cm: array<array<double>>",
     )
@@ -1022,8 +1025,9 @@ def pq_topk(
         # F.array() of zero structs has null element type and breaks field
         # extraction — return an explicitly-typed empty result instead
         idt = dict(codes.dtypes)[id_col]
-        return codes.sparkSession.createDataFrame(
-            [], f"{query_id_col} {idt}, neighbor_id {idt}, adc_dist double, rank int"
+        return local_table(
+            codes.sparkSession, [],
+            f"{query_id_col} {idt}, neighbor_id {idt}, adc_dist double, rank int",
         )
 
     scored_cols = []

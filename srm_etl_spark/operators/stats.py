@@ -60,5 +60,6 @@ class Stats:
             except Exception:
                 continue
         from ..session import get_spark  # noqa: PLC0415
+        from ..sources.tables import local_table  # noqa: PLC0415
 
-        return get_spark().createDataFrame(rows, "name string, value long")
+        return local_table(get_spark(), rows, "name string, value long")

@@ -95,6 +95,7 @@ def training_corpus_stages(
     from ..operators.dedup import minhash_dedup  # noqa: PLC0415
     from ..operators.session_cache import keep_checkpointed_pooled  # noqa: PLC0415
     from ..operators.windows import top_k_per_group  # noqa: PLC0415
+    from ..sources.tables import local_table  # noqa: PLC0415
 
     def _pin(df: DataFrame) -> DataFrame:
         if persist:
@@ -153,7 +154,7 @@ def training_corpus_stages(
         )
         collected = sel_rows.collect()  # ≤ dsir_k rows
         spark = clean.sparkSession
-        sel = spark.createDataFrame(collected, sel_rows.schema)
+        sel = local_table(spark, collected, sel_rows.schema)
         stages_extra["dsir"] = sel
         if collected:
             selected = clean.filter(

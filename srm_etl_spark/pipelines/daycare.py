@@ -37,7 +37,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hasher
-from ..sources.tables import load_table
+from ..sources.tables import load_table, local_table
 
 DAYCARE_SOURCE = "mol_daycare"
 COUNCIL_PREFIXES = ["מועצה מקומית", "מועצה אזורית", "עיריית"]
@@ -137,7 +137,7 @@ def org_dim(spark: SparkSession) -> DataFrame:
     """The unpacked+normalized Airtable lookup (match_organizations.py:18-37):
     first element of the array cell, stripped, nulls dropped, עירית
     normalized."""
-    dim = spark.createDataFrame(DAYCARE_ORG_DIM, "rec_id string, names array<string>")
+    dim = local_table(spark, DAYCARE_ORG_DIM, "rec_id string, names array<string>")
     return (
         dim.select(
             "rec_id",

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from ..functions.cleaning import clean_org_name, fix_url
 from ..functions.geo import olc_encode
-from ..sources.tables import load_table
+from ..sources.tables import load_table, local_table
 
 # ---------------------------------------------------------------------------
 # deterministic scrape fixtures (supplier/customer/part → Guidestar shapes)
@@ -360,15 +360,10 @@ def taxonomy_mapping(spark: SparkSession) -> DataFrame:
     merged, reference ``entities/__init__.py:634-657``): tag → response_ids /
     situation_ids; Status REJECTED rows form the rejected set; tags with no
     row are unknown (written back for curators)."""
-    from .meser import _session_mapping  # noqa: PLC0415
-
-    return _session_mapping(
+    return local_table(
         spark,
-        "entities_taxonomy",
-        lambda: spark.createDataFrame(
-            TAG_ROWS,
-            "tag string, response_ids array<string>, situation_ids array<string>, status string",
-        ),
+        TAG_ROWS,
+        "tag string, response_ids array<string>, situation_ids array<string>, status string",
     )
 
 

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.taxonomy import update_taxonomy_with_parents
+from ..sources.tables import local_table
 
 # reference to_es.py:179-184 — hand-curated region entries (domain constants,
 # shared-literal no-drift discipline)
@@ -76,7 +77,8 @@ def places_surface(spark: SparkSession, locations: DataFrame) -> DataFrame:
     stand-in for the downloaded bounds datapackage, to_es.py:164)."""
     from .staging_fixtures import places_source  # noqa: PLC0415
 
-    pre = spark.createDataFrame(
+    pre = local_table(
+        spark,
         PREDEFINED_PLACES,
         "key string, name array<string>, bounds array<double>, place string",
     )

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from ..functions.geo import itm_to_wgs84_approx, olc_encode
 from ..functions.html import sanitize_html
 from ..operators.relational import concatenate
+from ..sources.tables import local_table
 
 # ---------------------------------------------------------------------------
 # shared constants (verbatim parity values from the reference operators)
@@ -150,7 +151,8 @@ def tipat_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(k % 3 == 0, F.lit(31.0) + (k % 300).cast("double") * F.lit(0.01))
         .alias("y_coordinate"),
     ).filter(F.col("status") == "פעיל")
-    national = spark.createDataFrame(
+    national = local_table(
+        spark,
         [("national", "פעיל", "טיפת חלב - מוקד טלפוני", "משרד הבריאות")],
         "code string, status string, station_name string, ownership string",
     )
@@ -276,7 +278,7 @@ def tipat_branches(spark: SparkSession, raw: DataFrame) -> DataFrame:
     """tipat FIELD_MAP (tipat/__init__.py:118-131): ownership → org id via a
     broadcast dict-lookup (J6), national-branch special cases, WGS84 OLC."""
     orgs = F.broadcast(
-        spark.createDataFrame(list(TIPAT_ORGS.items()), "ownership string, org_id string")
+        local_table(spark, TIPAT_ORGS.items(), "ownership string, org_id string")
     )
     j = raw.join(orgs, "ownership", "left")
     is_national = F.col("code") == "national"

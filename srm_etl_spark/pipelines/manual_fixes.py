@@ -101,8 +101,10 @@ def apply_manual_fixes(
         .alias("fixed"),
     )
 
-    # Which fields can a fix touch? Driver-side read of the tiny dimension.
-    fields = sorted(r["field"] for r in dim.select("field").distinct().collect())
+    # Which fields can a fix touch? Driver-side read of the tiny dimension,
+    # deduped here: no job on a literal (LocalRelation) dimension, one on any
+    # other frame (a distinct() would add a shuffle job).
+    fields = sorted({r["field"] for r in fixes.select("field").collect()})
 
     rid = F.col(id_col)
     ex = rows.select(rid.alias("_rid"), F.posexplode(fixes_col).alias("_pos", "fix_id")).join(
@@ -275,8 +277,10 @@ MF_FIXES = [
 
 
 def mf_fixes(spark) -> DataFrame:
-    return spark.createDataFrame(
-        MF_FIXES, "fix_id string, field string, current_value string, fixed_value string"
+    from ..sources.tables import local_table  # noqa: PLC0415
+
+    return local_table(
+        spark, MF_FIXES, "fix_id string, field string, current_value string, fixed_value string"
     )
 
 

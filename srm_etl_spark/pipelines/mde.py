@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.tables import load_table
+from ..sources.tables import load_table, local_table
 
 # ---------------------------------------------------------------------------
 # external manual data entry
@@ -142,15 +142,10 @@ MDE_TAG_ROWS = [
 
 
 def mde_categories(spark: SparkSession) -> DataFrame:
-    from .meser import _session_mapping  # noqa: PLC0415
-
-    return _session_mapping(
+    return local_table(
         spark,
-        "mde_categories",
-        lambda: spark.createDataFrame(
-            MDE_TAG_ROWS,
-            "tag string, response_ids array<string>, situation_ids array<string>",
-        ),
+        MDE_TAG_ROWS,
+        "tag string, response_ids array<string>, situation_ids array<string>",
     )
 
 

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.geo import olc_encode
-from ..sources.tables import load_table
+from ..sources.tables import load_table, local_table
 
 MISSING_VALUES = ["NULL", "-1", "לא ידוע", "לא משויך", "רב תכליתי"]
 FALLBACK_ORG = "500106406"
@@ -135,39 +135,12 @@ MESER_TAG_ROWS = [
 ]
 
 
-
-
-# createDataFrame LocalRelations do NOT canonicalize equal across separate
-# calls (sameSemantics returns False even for identical rows), which would
-# defeat every keep_persisted slot downstream of a mapping frame. One frame
-# per session fixes identity at the source.
-_MAPPING_MEMO: dict = {}
-
-
-def _session_mapping(spark, key: str, builder):
-    # hold the session OBJECT in the entry and compare identity — id(spark)
-    # alone can be recycled by the allocator after a session is GC'd, which
-    # would serve a dead session's frame to its successor
-    entry = _MAPPING_MEMO.get(key)
-    if entry is None or entry[0] is not spark:
-        if entry is not None or any(e[0] is not spark for e in _MAPPING_MEMO.values()):
-            # a new session replaces ALL stale entries at once (their frames
-            # are bound to the old context)
-            for k in [k for k, e in _MAPPING_MEMO.items() if e[0] is not spark]:
-                del _MAPPING_MEMO[k]
-        _MAPPING_MEMO[key] = (spark, builder())
-    return _MAPPING_MEMO[key][1]
-
-
 def meser_tag_mapping(spark: SparkSession) -> DataFrame:
     """The meser-tagging curator table (reference ``__init__.py:186-201``)."""
-    return _session_mapping(
+    return local_table(
         spark,
-        "meser_tags",
-        lambda: spark.createDataFrame(
-            MESER_TAG_ROWS,
-            "tag string, response_ids array<string>, situation_ids array<string>",
-        ),
+        MESER_TAG_ROWS,
+        "tag string, response_ids array<string>, situation_ids array<string>",
     )
 
 

@@ -478,6 +478,50 @@ EXT14_REGISTRY["q133_meser_staged"] = QueryDef(
 # ---------------------------------------------------------------------------
 
 
+def _stage_batches(spark, fetched, base: str) -> list[str]:
+    """q137's four batch files, one id column each: ids ending in 0-3, in
+    4-6, in 7-9, then every id (the reconciliation snapshot, which restores
+    partial-feed statuses).
+
+    Two writes, and the lineage of ``fetched`` runs once: the single-file
+    write of ``fetched`` IS the snapshot, and one partitionBy write of its
+    read-back carves the three partial batches. The read-back takes the
+    schema the writer just used, so no schema-inference job runs."""
+    import glob  # noqa: PLC0415
+    import os  # noqa: PLC0415
+
+    import pyarrow as pa  # noqa: PLC0415
+    import pyarrow.parquet as pq  # noqa: PLC0415
+
+    fdir = os.path.join(base, "fetched")
+    fetched.coalesce(1).write.parquet(fdir)
+    fetched = spark.read.schema(fetched.schema).parquet(fdir)
+    last = F.substring(F.col("id"), -1, 1)
+    bucket = (
+        F.when(last.isin("0", "1", "2", "3"), 0)
+        .when(last.isin("4", "5", "6"), 1)
+        .when(last.isin("7", "8", "9"), 2)
+    )
+    pdir = os.path.join(base, "partial")
+    (
+        fetched.withColumn("_b", bucket).filter(F.col("_b").isNotNull())
+        .coalesce(1).write.partitionBy("_b").parquet(pdir)
+    )
+    staged = []
+    for i in range(3):
+        files = glob.glob(os.path.join(pdir, f"_b={i}", "*.parquet"))
+        if files:
+            (src,) = files
+        else:
+            # a bucket with no rows still lands an empty batch file, so the
+            # version chain does not depend on the fetch's digit spread
+            src = os.path.join(pdir, f"empty{i}.parquet")
+            pq.write_table(pa.schema([("id", pa.string())]).empty_table(), src)
+        staged.append(src)
+    (snapshot,) = glob.glob(os.path.join(fdir, "*.parquet"))
+    return staged + [snapshot]
+
+
 def q137_meser_streaming_staging(spark, sf_dir):
     """The meser org merge as a STREAMING deployment: the fetched org ids
     arrive as three partial micro-batches plus a reconciliation snapshot
@@ -489,7 +533,6 @@ def q137_meser_streaming_staging(spark, sf_dir):
     is in the fetch, soft-deleted meser rows INACTIVE, rows of OTHER staging
     sources preserved untouched across every version — one upsert
     implementation, two drivers (SURVEY §2.10)."""
-    import glob  # noqa: PLC0415
     import os  # noqa: PLC0415
     import shutil  # noqa: PLC0415
     import time as _time  # noqa: PLC0415
@@ -509,32 +552,12 @@ def q137_meser_streaming_staging(spark, sf_dir):
     data = os.path.join(base, "stream")
     os.makedirs(data)
     now = _time.time()
-    # Execute the transform lineage ONCE: all four batch files are
-    # projections of `fetched`, so materialize it and carve the batches out
-    # of the (org-registry-sized) re-read — previously every batch write
-    # re-ran sanitize+transform+groupBy+distinct, 4 full executions for one
-    # result (guide §1.2: don't compute things you throw away).
-    fdir = os.path.join(base, "fetched")
-    fetched.coalesce(1).write.parquet(fdir)
-    fetched = spark.read.parquet(fdir)
-    last = F.substring(F.col("id"), -1, 1)
-    batches = [
-        fetched.filter(last.isin("0", "1", "2", "3")),
-        fetched.filter(last.isin("4", "5", "6")),
-        fetched.filter(last.isin("7", "8", "9")),
-        fetched,  # reconciliation snapshot — restores partial-feed statuses
-    ]
-    staged = []
-    for i, b in enumerate(batches):
-        d = os.path.join(base, f"b{i}")
-        b.coalesce(1).write.mode("overwrite").parquet(d)
-        (src,) = glob.glob(os.path.join(d, "*.parquet"))
-        staged.append(src)
+    staged = _stage_batches(spark, fetched, base)
 
     def land(i: int) -> None:
         dst = os.path.join(data, f"batch{i}.parquet")
         shutil.copy(staged[i], dst)
-        os.utime(dst, (now - 100 * (len(batches) - i),) * 2)
+        os.utime(dst, (now - 100 * (len(staged) - i),) * 2)
 
     root = os.path.join(base, "staging")
     # bootstrap: the current staging table is version -1
@@ -548,7 +571,7 @@ def q137_meser_streaming_staging(spark, sf_dir):
             .option("maxFilesPerTrigger", 1)
             .parquet(data)
         )
-        stream_upsert_to_staging(
+        return stream_upsert_to_staging(
             stream, root, key="id", source_id="meser",
             checkpoint=os.path.join(base, "ckpt"),
             source_bytes=sum(os.path.getsize(p) for p in staged),
@@ -563,19 +586,20 @@ def q137_meser_streaming_staging(spark, sf_dir):
         for i in range(2):
             land(i)
         run_merge()
-        for i in range(2, len(batches)):
+        for i in range(2, len(staged)):
             land(i)
-        run_merge()
+        schema = run_merge()
     else:
-        for i in range(len(batches)):
+        for i in range(len(staged)):
             land(i)
-        run_merge()
+        schema = run_merge()
     final = latest_staging_version(root)
     if final is None or final.endswith("v=-1"):
         raise RuntimeError(
             f"q137: streaming merge published no new staging version under {root}"
         )
-    return spark.read.parquet(final).select("id", "source", "status")
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(final).select("id", "source", "status")
 
 
 Q137_SQL = f"""

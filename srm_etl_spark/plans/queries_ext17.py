@@ -17,6 +17,7 @@ from __future__ import annotations
 from ..pipelines import clinics as MHC
 from ..pipelines import manual_fixes as MF
 from ._scalar import scalarized_sql, stringify_arrays
+from ..sources.tables import local_table
 from .queries import QueryDef
 
 
@@ -247,8 +248,8 @@ def q149_curation_with_fixes(spark, sf_dir):
     from ..pipelines import mde as MDEP  # noqa: PLC0415
     from ._scalar import stringify_arrays  # noqa: PLC0415
 
-    fixes_dim = spark.createDataFrame(
-        CFX_FIXES, "fix_id string, field string, current_value string, fixed_value string"
+    fixes_dim = local_table(
+        spark, CFX_FIXES, "fix_id string, field string, current_value string, fixed_value string"
     )
     pk = F.substring(F.col("id"), 6, 100).cast("int")
     fixes_col = (

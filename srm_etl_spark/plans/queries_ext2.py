@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..operators.asof import asof_join
 from ..operators.skew import salted_join
+from ..sources.tables import local_table
 from .queries import QueryDef, _t
 
 _SINK_IDS = itertools.count()
@@ -296,7 +297,7 @@ def q52_band_join(spark, sf_dir):
     table this becomes a bucketized equi-join instead. Inclusive-exclusive
     [lo, hi) bands, disjoint by construction."""
     ev = _t(spark, sf_dir, "events")
-    tiers = spark.createDataFrame(_TIERS, "tier string, lo double, hi double")
+    tiers = local_table(spark, _TIERS, "tier string, lo double, hi double")
     cond = (F.col("value") >= F.col("lo")) & (F.col("value") < F.col("hi"))
     return (
         ev.join(F.broadcast(tiers), cond, "inner")

@@ -227,6 +227,7 @@ def q159_publish_fanout(spark, sf_dir):
     from ..sinks.es import to_es_actions  # noqa: PLC0415
     from ..sinks.files import sitemap_documents  # noqa: PLC0415
     from ..sinks.jdbc import index_ddl  # noqa: PLC0415
+    from ..sources.tables import local_table  # noqa: PLC0415
 
     stages = run_derive(spark, sf_dir)
     cards = stages["card_data"]
@@ -265,7 +266,8 @@ def q159_publish_fanout(spark, sf_dir):
             _s("organization_name"), _s("national_service"),
         ).alias("payload"),
     )
-    ddl = spark.createDataFrame(
+    ddl = local_table(
+        spark,
         [(f, stmt) for f, stmt in zip(_CARD_INDEX_FIELDS, index_ddl("cards", _CARD_INDEX_FIELDS))],
         "field string, stmt string",
     ).select(

@@ -12,6 +12,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..operators.bloom import bloom_semi_join
+from ..sources.tables import local_table
 from .queries import QueryDef, _t
 
 # --------------------------------------------------------------------------
@@ -310,7 +311,8 @@ def q73_stream_enrich(spark, sf_dir):
         stream_static_enrich,
     )
 
-    dim = spark.createDataFrame(
+    dim = local_table(
+        spark,
         [("click", "engagement"), ("view", "engagement"), ("purchase", "revenue")],
         "event_type string, family string",
     )

@@ -147,6 +147,31 @@ def parse_byte_size(value, default: int | None = None) -> int:
         raise ValueError(f"unparseable byte size: {value!r}") from None
 
 
+def _default_driver_memory() -> str:
+    """Host-sized ``spark.driver.memory``: 40% of min(MemTotal, cgroup
+    memory limit), between 1g and 48g. The rest is headroom for the JVM's
+    off-heap memory, the Python workers (one per core) and ``/dev/shm``
+    scratch; a heap sized past the host lets a long session grow until the
+    kernel OOM-kills it. 48g when neither limit can be read."""
+    limits = []
+    try:
+        with open("/proc/meminfo") as fh:
+            limits += [int(ln.split()[1]) * 1024 for ln in fh if ln.startswith("MemTotal:")]
+    except (OSError, ValueError):
+        pass
+    for path in ("/sys/fs/cgroup/memory.max", "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as fh:
+                raw = fh.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():  # cgroup v2 writes "max" when unlimited
+            limits.append(int(raw))
+    if not limits:
+        return "48g"
+    return f"{max(1024, min(48 << 10, min(limits) * 2 // 5 >> 20))}m"
+
+
 def get_spark(
     app_name: str = "srm-etl-spark",
     master: str | None = None,
@@ -225,9 +250,11 @@ def get_spark(
         # heap exhaustion unrelated to operator spill behavior.
         .config(
             "spark.driver.memory",
-            os.environ.get(
-                "SPARK_DRIVER_MEMORY",
-                "12g" if os.environ.get("SPARK_GRAFT_SPILL") == "1" else "48g",
+            os.environ.get("SPARK_DRIVER_MEMORY")
+            or (
+                "12g"
+                if os.environ.get("SPARK_GRAFT_SPILL") == "1"
+                else _default_driver_memory()
             ),
         )
         .config(

@@ -357,20 +357,33 @@ def stream_upsert_to_staging(
     discipline as the ES revision sweep, K3); nothing is collected to the
     driver and no path is overwritten while being read. On a transactional
     table format the version directory collapses into a MERGE commit.
+
+    Returns the schema of the last version this run wrote (None when no
+    batch ran), so a caller can read that version back without a
+    schema-inference job.
     """
     from ..operators.upsert import staging_upsert  # noqa: PLC0415
+    from ..sources.tables import local_table  # noqa: PLC0415
+
+    # The version the previous micro-batch wrote is read back with the
+    # schema it was written with; only the first batch of a query start (a
+    # recovery resume included) reads a version of unknown schema and infers.
+    written: dict = {}
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         latest = latest_staging_version(staging_root)
         if latest:
-            current = spark.read.parquet(latest)
+            reader = spark.read
+            if written.get("path") == latest:
+                reader = reader.schema(written["schema"])
+            current = reader.parquet(latest)
         else:
             # bootstrap: empty staging with the upsert bookkeeping columns
             # (the change hash covers source+status, reference
             # update_table.py:28-32)
             current = (
-                spark.createDataFrame([], batch_df.schema)
+                local_table(spark, [], batch_df.schema)
                 .withColumn("source", F.lit(None).cast("string"))
                 .withColumn("status", F.lit(None).cast("string"))
             )
@@ -387,7 +400,9 @@ def stream_upsert_to_staging(
                 F.col("source").isNull() | ~F.col("source").isin(source_id, "dummy")
             )
             merged = merged.unionByName(others.select(*merged.columns))
-        merged.write.mode("overwrite").parquet(f"{staging_root}/v={batch_id}")
+        path = f"{staging_root}/v={batch_id}"
+        merged.write.mode("overwrite").parquet(path)
+        written.update(path=path, schema=merged.schema)
 
     writer = stream.writeStream.foreachBatch(merge_batch).trigger(availableNow=True)
     if checkpoint:
@@ -395,9 +410,8 @@ def stream_upsert_to_staging(
     # scale the per-micro-batch MERGE shuffles to the feed volume (the
     # foreachBatch joins inherit the session shuffle partitioning)
     with scaled_state_partitions(stream.sparkSession, source_bytes):
-        q = writer.start()
-        q.awaitTermination()
-    return q
+        writer.start().awaitTermination()
+    return written.get("schema")
 
 
 # ---------------------------------------------------------------------------
