@@ -5,9 +5,9 @@ The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
 value-hash → CORRECTNESS_r{N}.json).
 
-All query definitions live in ``srm_etl_spark.plans.queries`` (one entry per
-operator from SURVEY.md §2 plus the LLM-data-pipeline extensions); this module
-is just the adapter.
+All query definitions live in the ``srm_etl_spark.plans`` family modules (one
+entry per operator from SURVEY.md §2 plus the LLM-data-pipeline extensions);
+this module is just the adapter.
 """
 
 from __future__ import annotations

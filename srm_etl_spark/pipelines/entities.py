@@ -26,7 +26,7 @@ Here every generator becomes a declarative DataFrame composition:
 
 The scrape inputs are synthesized deterministically from the warehouse tables
 (supplier→orgs, customer→branches, part→services), mirrored 1:1 in the oracle
-SQL of plans/queries_ext13.py, so the whole vertical is DuckDB-checkable.
+SQL of plans/verticals.py, so the whole vertical is DuckDB-checkable.
 """
 
 from __future__ import annotations
@@ -350,7 +350,7 @@ def _tag_rows() -> list:
     return rows
 
 
-# shared with the oracle SQL generator (queries_ext13) so both engines read
+# shared with the oracle SQL generator (plans/verticals.py) so both engines read
 # the SAME literal mapping — the q108 no-drift discipline
 TAG_ROWS = _tag_rows()
 

@@ -259,7 +259,7 @@ def apply_manual_fixes(
 
 
 # ---------------------------------------------------------------------------
-# Deterministic fixture (plans/queries_ext17.py oracles mirror this
+# Deterministic fixture (plans/verticals.py oracles mirror this
 # arithmetic 1:1 — the q108/q138 no-drift discipline; MF_FIXES is the ONE
 # literal table shared by engine and oracle).
 # ---------------------------------------------------------------------------

@@ -21,7 +21,7 @@ Spark shape: every per-row generator becomes a projection; the per-sheet
 row index is a window ``row_number`` over the explicit sheet position; the
 import maps are broadcast joins against the just-imported keys (no
 driver-side dicts). Fixtures are deterministic warehouse mappings mirrored
-in plans/queries_ext15.py's oracle SQL.
+in plans/verticals.py's oracle SQL.
 """
 
 from __future__ import annotations

@@ -27,7 +27,7 @@ Spark-first shape:
   ``get_foreign_key_by_field``).
 
 The raw feed is synthesized deterministically from the orders table and
-mirrored in the DuckDB oracle SQL of plans/queries_ext14.py.
+mirrored in the DuckDB oracle SQL of plans/verticals.py.
 """
 
 from __future__ import annotations

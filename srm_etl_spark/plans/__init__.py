@@ -4,64 +4,27 @@
 callable takes (spark, sf_dir) and returns a DataFrame; ``oracle`` is the
 equivalent ANSI SQL for DuckDB over the same parquet tables (None for ops SQL
 can't express, which downgrade to a rows-only check).
+
+The queries live in family modules grouped by what they test; each family
+holds its entries in a ``QUERIES`` dict.
 """
 
-from .queries import REGISTRY, QueryDef  # noqa: F401
-from .queries_ext import EXT_REGISTRY
-from .queries_ext2 import EXT2_REGISTRY
-from .queries_ext3 import EXT3_REGISTRY
-from .queries_ext4 import EXT4_REGISTRY
-from .queries_ext5 import EXT5_REGISTRY
-from .queries_ext6 import EXT6_REGISTRY
-from .queries_ext7 import EXT7_REGISTRY
-from .queries_ext8 import EXT8_REGISTRY
-from .queries_ext9 import EXT9_REGISTRY
-from .queries_ext10 import EXT10_REGISTRY
-from .queries_ext11 import EXT11_REGISTRY
-from .queries_ext12 import EXT12_REGISTRY
-from .queries_ext13 import EXT13_REGISTRY
-from .queries_ext14 import EXT14_REGISTRY
-from .queries_ext15 import EXT15_REGISTRY
-from .queries_ext16 import EXT16_REGISTRY
-from .queries_ext17 import EXT17_REGISTRY
-from .queries_ext18 import EXT18_REGISTRY
-from .queries_ext19 import EXT19_REGISTRY
-from .queries_ext20 import EXT20_REGISTRY
-from .queries_ext21 import EXT21_REGISTRY
-from .queries_ext22 import EXT22_REGISTRY
-from .queries_ext23 import EXT23_REGISTRY
-from .queries_ext24 import EXT24_REGISTRY
-from .queries_ext25 import EXT25_REGISTRY
-from .queries_ext26 import EXT26_REGISTRY
-from .queries_ext27 import EXT27_REGISTRY
+from . import composed, relational, similarity, sources_sinks, streaming, text_dedup, verticals
+from .common import QueryDef
 
-REGISTRY.update(EXT_REGISTRY)
-REGISTRY.update(EXT2_REGISTRY)
-REGISTRY.update(EXT3_REGISTRY)
-REGISTRY.update(EXT4_REGISTRY)
-REGISTRY.update(EXT5_REGISTRY)
-REGISTRY.update(EXT6_REGISTRY)
-REGISTRY.update(EXT7_REGISTRY)
-REGISTRY.update(EXT8_REGISTRY)
-REGISTRY.update(EXT9_REGISTRY)
-REGISTRY.update(EXT10_REGISTRY)
-REGISTRY.update(EXT11_REGISTRY)
-REGISTRY.update(EXT12_REGISTRY)
-REGISTRY.update(EXT13_REGISTRY)
-REGISTRY.update(EXT14_REGISTRY)
-REGISTRY.update(EXT15_REGISTRY)
-REGISTRY.update(EXT16_REGISTRY)
-REGISTRY.update(EXT17_REGISTRY)
-REGISTRY.update(EXT18_REGISTRY)
-REGISTRY.update(EXT19_REGISTRY)
-REGISTRY.update(EXT20_REGISTRY)
-REGISTRY.update(EXT21_REGISTRY)
-REGISTRY.update(EXT22_REGISTRY)
-REGISTRY.update(EXT23_REGISTRY)
-REGISTRY.update(EXT24_REGISTRY)
-REGISTRY.update(EXT25_REGISTRY)
-REGISTRY.update(EXT26_REGISTRY)
-REGISTRY.update(EXT27_REGISTRY)
+FAMILIES = (relational, text_dedup, similarity, streaming, sources_sinks, verticals, composed)
+
+
+def _collect(families) -> dict[str, QueryDef]:
+    """Join the family dicts; a name registered by two families is an error."""
+    out: dict[str, QueryDef] = {}
+    for fam in families:
+        for name, qdef in fam.QUERIES.items():
+            if name in out:
+                raise ValueError(f"query {name!r} is registered twice (again in {fam.__name__})")
+            out[name] = qdef
+    return out
+
 
 # Driver-window rotation, round 14: the gate verifies the FIRST 50 registry
 # entries. This round's window = the queries whose ENGINE semantics or
@@ -127,9 +90,16 @@ _WINDOW = [
     "q146_childcare_services",
     "q147_kz_orgs",
 ]
-assert len(_WINDOW) == 50 and all(n in REGISTRY for n in _WINDOW)
-_ordered = {n: REGISTRY[n] for n in _WINDOW} | {
-    n: REGISTRY[n] for n in REGISTRY if n not in _WINDOW
+
+
+def _rank(name: str) -> float:
+    """Order after the window: by query number, except that q148 keeps its
+    historical slot right after q149."""
+    return 149.5 if name == "q148_mp4_keyframes" else int(name[1:name.index("_")])
+
+
+_queries = _collect(FAMILIES)
+assert len(_WINDOW) == 50 and all(n in _queries for n in _WINDOW)
+REGISTRY: dict[str, QueryDef] = {n: _queries[n] for n in _WINDOW} | {
+    n: _queries[n] for n in sorted(_queries, key=_rank) if n not in _WINDOW
 }
-REGISTRY.clear()
-REGISTRY.update(_ordered)

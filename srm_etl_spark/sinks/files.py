@@ -28,7 +28,7 @@ def write_clustered(
     target_files: int | None = None,
 ) -> None:
     """Layout-clustered parquet write: range-partition on ``cluster_cols``
-    (e.g. a z-order key from plans/queries_ext5.q70_zorder_key) and sort
+    (e.g. a z-order key from plans/relational.q70_zorder_key) and sort
     within partitions, so each output file covers a narrow, non-overlapping
     key range and parquet min/max row-group stats prune scans on the
     clustered dimensions. This is the write side of Delta/Iceberg

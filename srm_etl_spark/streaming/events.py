@@ -1,7 +1,7 @@
 """Streaming event pipelines (capability extension over the strictly-batch
 reference — SURVEY §2.12).
 
-The same logical plans as the batch twins (plans/queries.py q32, q17), lifted
+The same logical plans as the batch twins (q32 in plans/streaming.py, q17 in plans/relational.py), lifted
 to Structured Streaming: a file source replayed incrementally, event-time
 watermarks bounding state, and window aggregates that emit finalized windows.
 State stores shard by group key across executors, so every operator here

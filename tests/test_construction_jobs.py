@@ -89,7 +89,7 @@ def test_load_table_and_local_table_launch_no_jobs(spark, sf_dir):
 def _literal_tables(spark):
     from srm_etl_spark.pipelines import daycare, entities, es_publish, govsources, mde, meser
     from srm_etl_spark.pipelines import manual_fixes as mf
-    from srm_etl_spark.plans import queries_ext2, queries_ext17
+    from srm_etl_spark.plans import relational, verticals
 
     return {
         "mf_fixes": (mf.mf_fixes(spark), mf.MF_FIXES),
@@ -112,15 +112,15 @@ def _literal_tables(spark):
             es_publish.PREDEFINED_PLACES,
         ),
         "band_tiers": (
-            local_table(spark, queries_ext2._TIERS, "tier string, lo double, hi double"),
-            queries_ext2._TIERS,
+            local_table(spark, relational._TIERS, "tier string, lo double, hi double"),
+            relational._TIERS,
         ),
         "curation_fixes": (
             local_table(
-                spark, queries_ext17.CFX_FIXES,
+                spark, verticals.CFX_FIXES,
                 "fix_id string, field string, current_value string, fixed_value string",
             ),
-            queries_ext17.CFX_FIXES,
+            verticals.CFX_FIXES,
         ),
     }
 
@@ -159,7 +159,7 @@ def test_apply_manual_fixes_reads_literal_fields_without_jobs(spark, sf_dir):
 
 
 def test_q137_batches_keep_contents_and_land_empty_buckets(spark, tmp_path):
-    from srm_etl_spark.plans.queries_ext14 import _stage_batches
+    from srm_etl_spark.plans.verticals import _stage_batches
 
     ids = ["10", "11", "23", "34", "46", "5x", "70"]  # no id ends in 7-9
     fetched = local_table(spark, [(i,) for i in ids], "id string")

@@ -47,7 +47,7 @@ def test_doremi_null_domain_kept_and_oracle_parity(spark):
     assert got[None]["n_docs"] == 1
     assert sum(r["weight"] for r in got.values()) == pytest.approx(1.0, abs=1e-5)
 
-    from srm_etl_spark.plans.queries_ext25 import Q168_SQL
+    from srm_etl_spark.plans.text_dedup import Q168_SQL
 
     con = duckdb.connect()
     con.register(

@@ -210,7 +210,7 @@ def test_cms_depth_cap(spark):
 # --- int8 quantization (q85 kernel) -----------------------------------------
 
 def test_quantize_roundtrip_error_bounded(spark):
-    from srm_etl_spark.plans.queries_ext8 import q85_quantize
+    from srm_etl_spark.plans.similarity import q85_quantize
 
     out = q85_quantize(spark, "/root/testdata/sf0.001").collect()
     for r in out:
@@ -375,7 +375,7 @@ def test_pq_rejects_indivisible_dim(spark):
 
 def test_hash_embedding_overlap_similarity(spark):
     from srm_etl_spark.operators.similarity import cosine_similarity
-    from srm_etl_spark.plans.queries_ext10 import hash_embedding
+    from srm_etl_spark.plans.similarity import hash_embedding
 
     df = spark.createDataFrame(
         [
@@ -402,7 +402,7 @@ def test_hash_embedding_md5_family_same_property(spark):
     # the md5 (oracle-checkable) feature family keeps the same geometry:
     # overlap => similar, disjoint => near-orthogonal; and is deterministic
     from srm_etl_spark.operators.similarity import cosine_similarity
-    from srm_etl_spark.plans.queries_ext10 import hash_embedding
+    from srm_etl_spark.plans.similarity import hash_embedding
 
     df = spark.createDataFrame(
         [
@@ -428,7 +428,7 @@ def test_hash_embedding_md5_family_same_property(spark):
 
 
 def test_rag_retrieval_finds_overlapping_neighbor(spark):
-    from srm_etl_spark.plans.queries_ext10 import hash_embedding
+    from srm_etl_spark.plans.similarity import hash_embedding
     from srm_etl_spark.operators.chunking import chunk_documents
     from srm_etl_spark.operators.similarity import brute_force_topk
 

@@ -169,7 +169,7 @@ def test_card_search_on_partitioned_write_prunes_partitions(spark, tmp_path):
 def test_bucketed_join_has_no_join_exchange(spark):
     # the registry entry materializes + drops its catalog tables; pin the
     # join plan on the pre-materialization frame the helper exposes
-    from srm_etl_spark.plans.queries_ext12 import q119_bucketed_agg_plan
+    from srm_etl_spark.plans.relational import q119_bucketed_agg_plan
 
     agg, to, tc, _ = q119_bucketed_agg_plan(spark, SF)
     qe = agg._jdf.queryExecution()
@@ -183,3 +183,34 @@ def test_bucketed_join_has_no_join_exchange(spark):
     assert join_part.count("Exchange") == 0, "co-bucketed join must not shuffle either side"
     # the only exchange in the whole plan is the final aggregate's
     assert plan.count("Exchange") == 1
+
+
+def test_registry_collector_rejects_a_name_two_families_register():
+    from types import SimpleNamespace
+
+    from srm_etl_spark.plans import _collect
+
+    a = SimpleNamespace(__name__="a", QUERIES={"q1_x": 1})
+    b = SimpleNamespace(__name__="b", QUERIES={"q1_x": 2})
+    with pytest.raises(ValueError, match="q1_x"):
+        _collect([a, b])
+
+
+def test_every_query_name_is_registered_once():
+    """The collector only sees dicts, so a name written twice inside one
+    family (a repeated dict key, or a second ``QUERIES[name] =``) would keep
+    the last entry silently; count the registrations in the sources instead."""
+    import ast
+    import inspect
+
+    from srm_etl_spark.plans import FAMILIES
+
+    names = []
+    for fam in FAMILIES:
+        for node in ast.walk(ast.parse(inspect.getsource(fam))):
+            if (isinstance(node, ast.Subscript) and isinstance(node.value, ast.Name)
+                    and node.value.id == "QUERIES" and isinstance(node.ctx, ast.Store)):
+                names.append(node.slice.value)
+            elif isinstance(node, ast.Call) and ast.unparse(node.func) == "QUERIES.update":
+                names += [k.value for k in node.args[0].keys]
+    assert len(names) == len(set(names)) == len(REGISTRY)

@@ -6,7 +6,7 @@ cells — an array/map/struct column in a final projection makes the query
 un-checkable at the gate (round-5 failure mode: q127/q128/q132-q136).  This
 test makes that class of failure mechanically impossible: the whole registry
 is schema-audited, and any complex-typed output column fails CI before the
-driver ever sees it.  Fix = ``plans._scalar.stringify_arrays`` on the Spark
+driver ever sees it.  Fix = ``plans.common.stringify_arrays`` on the Spark
 side paired with ``scalarized_sql`` on the oracle.
 
 Schema resolution is lazy — no job runs for ordinary queries — so the audit
@@ -32,6 +32,6 @@ def test_output_schema_is_scalar_only(spark, sf_dir, name):
     ]
     assert not bad, (
         f"{name} emits complex-typed columns {bad} — the driver gate cannot "
-        "canonicalize these; stringify them (plans/_scalar.py) in BOTH the "
+        "canonicalize these; stringify them (plans/common.py) in BOTH the "
         "Spark projection and the oracle SQL"
     )

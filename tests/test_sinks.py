@@ -199,7 +199,7 @@ def test_write_clustered_disjoint_ranges(spark, tmp_path):
 
     import pyarrow.parquet as pq
 
-    from srm_etl_spark.plans.queries_ext5 import q70_zorder_key
+    from srm_etl_spark.plans.relational import q70_zorder_key
     from srm_etl_spark.sinks.files import write_clustered
 
     z = q70_zorder_key(spark, "/root/testdata/sf0.001")

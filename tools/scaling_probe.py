@@ -313,7 +313,7 @@ def probes(spark):
         # arrives in many splits (every disk-backed probe corpus does).
         # Redistribute to the session's parallelism before the operator.
         p = p.repartition(64)
-        from srm_etl_spark.plans.queries_ext12 import fabricate_org_records  # noqa: PLC0415
+        from srm_etl_spark.plans.text_dedup import fabricate_org_records  # noqa: PLC0415
 
         p = p.select(
             "pk",
@@ -394,14 +394,14 @@ def probes(spark):
         # the COMPOSED §3.2 vertical (q129 shape): four sequential staged
         # merges with persisted scrape dims — fixed-cost knees would hide
         # here, not in the operator kernels
-        from srm_etl_spark.plans.queries_ext13 import q129_entities_staged  # noqa: PLC0415
+        from srm_etl_spark.plans.verticals import q129_entities_staged  # noqa: PLC0415
 
         return q129_entities_staged(spark, scaled_sf_dir(spark, k))
 
     def p_meser_staged(k):
         # the COMPOSED §3.3 vertical (q133 shape): three upserts + two
         # soft-delete sweeps + two FK remaps over the shared transform memo
-        from srm_etl_spark.plans.queries_ext14 import q133_meser_staged  # noqa: PLC0415
+        from srm_etl_spark.plans.verticals import q133_meser_staged  # noqa: PLC0415
 
         return q133_meser_staged(spark, scaled_sf_dir(spark, k))
 
@@ -411,7 +411,7 @@ def probes(spark):
         # autocomplete in one lineage. full=True scales LINEITEM coherently
         # with the dims so the service-side fact joins grow k x as well —
         # this is the probe where a cross-stage handoff knee would show
-        from srm_etl_spark.plans.queries_ext21 import q158_derive_staged  # noqa: PLC0415
+        from srm_etl_spark.plans.composed import q158_derive_staged  # noqa: PLC0415
 
         return q158_derive_staged(spark, scaled_sf_dir(spark, k, full=True))
 
@@ -419,7 +419,7 @@ def probes(spark):
         # the derive TAIL (q159 shape): one persisted card surface feeding
         # ES action lines + sitemap chunks + SQL rows; shares the k-x derive
         # memo with p_derive_staged, so this isolates the fan-out cost
-        from srm_etl_spark.plans.queries_ext21 import q159_publish_fanout  # noqa: PLC0415
+        from srm_etl_spark.plans.composed import q159_publish_fanout  # noqa: PLC0415
 
         return q159_publish_fanout(spark, scaled_sf_dir(spark, k, full=True))
 
@@ -433,7 +433,7 @@ def probes(spark):
         # end-to-end; q160's phase pins would turn a second rep into a
         # cache scan and flatten the scale signal
         from srm_etl_spark.pipelines.curation import training_corpus_stages  # noqa: PLC0415
-        from srm_etl_spark.plans.queries import _t  # noqa: PLC0415
+        from srm_etl_spark.plans.common import _t  # noqa: PLC0415
 
         d = _t(spark, scaled_docs_dir(spark, k), "documents")
         ev = d.filter(F.col("doc_id") % 37 == 0)
@@ -446,14 +446,14 @@ def probes(spark):
         # orgs + autocomplete. The count legs are map-side-combinable hash
         # aggregates (shuffle ≤ |taxonomy|) — this probe watches them and the
         # shared-surface persist under a k-x derive
-        from srm_etl_spark.plans.queries_ext23 import q161_es_publish_surfaces  # noqa: PLC0415
+        from srm_etl_spark.plans.composed import q161_es_publish_surfaces  # noqa: PLC0415
 
         return q161_es_publish_surfaces(spark, scaled_sf_dir(spark, k, full=True))
 
     def p_mapbox_geo(k):
         # the mapbox geo_data + points composition (q162 shape): ONE shuffle
         # on point_id; both mode keepers are two-level hash aggregates
-        from srm_etl_spark.plans.queries_ext23 import q162_mapbox_geo_flow  # noqa: PLC0415
+        from srm_etl_spark.plans.composed import q162_mapbox_geo_flow  # noqa: PLC0415
 
         return q162_mapbox_geo_flow(spark, scaled_sf_dir(spark, k, full=True))
 
@@ -462,7 +462,7 @@ def probes(spark):
         # chain + per-key merge + the official fuzzy handshake. The watched
         # part is the broadcast NLJ (|keys| x |officials|) — the round-11
         # length block prunes it before the levenshtein kernel
-        from srm_etl_spark.plans.queries_ext23 import q163_place_bounds  # noqa: PLC0415
+        from srm_etl_spark.plans.composed import q163_place_bounds  # noqa: PLC0415
 
         return q163_place_bounds(spark, scaled_sf_dir(spark, k))
 
@@ -471,7 +471,7 @@ def probes(spark):
         # bucketing (pinned once), two B<=256-row map-side aggregates, a
         # broadcast literal map, TakeOrderedAndProject top-k — nothing here
         # should go super-linear in the corpus
-        from srm_etl_spark.plans.queries_ext23 import q164_dsir_selection  # noqa: PLC0415
+        from srm_etl_spark.plans.text_dedup import q164_dsir_selection  # noqa: PLC0415
 
         return q164_dsir_selection(spark, scaled_docs_dir(spark, k))
 
@@ -488,7 +488,7 @@ def probes(spark):
         # the WHOLE-ETL composition (q165 shape): staging merges -> derive
         # DAG over the post-merge state -> publish surfaces, k-x warehouse
         # with coherently-remapped lineitem FKs (full=True)
-        from srm_etl_spark.plans.queries_ext24 import q165_etl_end_to_end  # noqa: PLC0415
+        from srm_etl_spark.plans.composed import q165_etl_end_to_end  # noqa: PLC0415
 
         return q165_etl_end_to_end(spark, scaled_sf_dir(spark, k, full=True))
 
