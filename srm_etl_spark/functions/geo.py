@@ -86,30 +86,6 @@ def itm_to_wgs84_approx(x: Column, y: Column) -> Column:
     return F.array(lon, lat)
 
 
-def itm_to_wgs84_pandas_udf():
-    """Arrow-batched pyproj transform; raises if pyproj is unavailable.
-
-    Returns a pandas UDF ``(x, y) -> array<double> [lon, lat]`` that converts
-    whole Arrow batches at once (vectorized inside pyproj).
-    """
-    try:
-        from pyproj import Transformer  # noqa: PLC0415
-    except ImportError as exc:  # pragma: no cover - env-dependent
-        raise NotImplementedError("pyproj not available in this environment") from exc
-
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
-
-    transformer = Transformer.from_crs("EPSG:2039", "EPSG:4326", always_xy=True)
-
-    @pandas_udf("array<double>")
-    def _convert(x: pd.Series, y: pd.Series) -> pd.Series:
-        lon, lat = transformer.transform(x.values, y.values)
-        return pd.Series([[lo, la] for lo, la in zip(lon, lat)])
-
-    return _convert
-
-
 # ---------------------------------------------------------------------------
 # Open Location Code (plus codes) — used by the reference as location keys
 # ---------------------------------------------------------------------------

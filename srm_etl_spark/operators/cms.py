@@ -107,7 +107,3 @@ def cms_estimate(
     )
 
 
-def cms_seeds(depth: int = 3) -> list[tuple[int, int]]:
-    """The pinned (a, b) hash parameters — exposed so oracle twins can
-    reproduce the exact sketch."""
-    return list(_SEEDS[:depth])

@@ -28,7 +28,8 @@ Scale shape: the explode is a map-side lateral fan-out (no shuffle until the
 query groupBy); the group step is one shuffle on the query string; the bounds
 dimension is broadcast and the fuzzy match runs as a per-row scan of ~10³
 keys, exactly like the reference's in-memory city list — at larger dimension
-sizes switch to the blocked ``fuzzy_join`` (operators/relational.py).
+sizes block the candidates first, as ``operators/relational.py:resolve_entities``
+does.
 """
 
 from __future__ import annotations

@@ -63,7 +63,7 @@ def q47_sliding_window(spark, sf_dir):
     """Sliding-window aggregation: each event lands in window/slide = 2
     overlapping windows. F.window emits the window replicas JVM-side before
     a single keyed shuffle — the same plan Structured Streaming runs with a
-    watermark bolted on (streaming/events.py:sliding_window_counts)."""
+    watermark bolted on."""
     ev = _t(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")

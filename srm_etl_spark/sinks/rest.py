@@ -59,19 +59,6 @@ def upsert_payloads(
             yield {"method": "POST", "records": creates, "typecast": typecast}
 
 
-def publish_rest(
-    payloads: Iterable[dict], send: Callable[[dict], None], max_batches: int | None = None
-) -> int:
-    """Drive the transport; returns the number of batches sent."""
-    n = 0
-    for p in payloads:
-        if max_batches is not None and n >= max_batches:
-            break
-        send(p)
-        n += 1
-    return n
-
-
 def ckan_dataset_payload(
     df: DataFrame,
     name: str,

@@ -19,7 +19,7 @@ Rules of thumb encoded here:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -58,5 +58,3 @@ def write_partitioned(
     df.write.format("parquet").mode(mode).partitionBy(*partition_cols).save(path)
 
 
-def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)

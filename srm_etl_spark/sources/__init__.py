@@ -1,3 +1,3 @@
-from .tables import TABLES, load_table, load_tables
+from .tables import TABLES, load_table
 
-__all__ = ["TABLES", "load_table", "load_tables"]
+__all__ = ["TABLES", "load_table"]

@@ -236,10 +236,6 @@ def local_table(spark: SparkSession, rows, schema: str | StructType) -> DataFram
     return spark.createDataFrame(table, struct)
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in (names or TABLES)}
-
-
 def load_datapackage(spark: SparkSession, path: str, resource: str | None = None) -> DataFrame:
     """S2: read a datapackage directory (the reference's inter-stage IR,
     written by sinks/files.py:write_datapackage or the reference's

@@ -2,7 +2,6 @@
 
 from .events import (  # noqa: F401
     session_window_counts,
-    sliding_window_counts,
     stream_events,
     streaming_dedup,
     tumbling_window_counts,

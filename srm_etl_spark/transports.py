@@ -104,18 +104,6 @@ def _session_cache(injected):
     return get
 
 
-def make_json_fetch(headers: dict | None = None, session=None, **rkw) -> Callable[..., dict]:
-    """``fetch_url(url, params=None) -> dict`` for the linked/datagovil
-    pagers (S5/S12) and any enveloped JSON source (S3/S10)."""
-
-    sess = _session_cache(session)
-
-    def fetch(url: str, params: dict | None = None) -> dict:
-        return request_json(url, session=sess(), headers=headers, params=params, **rkw)
-
-    return fetch
-
-
 def make_skip_limit_fetch_page(
     url: str,
     *,
