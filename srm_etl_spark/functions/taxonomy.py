@@ -47,17 +47,6 @@ def update_taxonomy_with_parents(ids: Column) -> Column:
     return F.array_sort(F.array_distinct(F.flatten(prefixes)))
 
 
-def merge_array_fields(*cols: Column | str) -> Column:
-    """Union N array columns: drop nulls/empties, flatten, dedupe, sort.
-
-    Mirror of the reference's merge (filter falsy -> chain -> set -> sorted).
-    """
-    cols = [F.col(c) if isinstance(c, str) else c for c in cols]
-    merged = F.concat(*[F.coalesce(c, F.array()) for c in cols])
-    merged = F.filter(merged, lambda x: x.isNotNull())
-    return F.array_sort(F.array_distinct(merged))
-
-
 _BOTH_GENDERS = ["human_situations:gender:women", "human_situations:gender:men"]
 _HEBREW = "human_situations:language:hebrew_speaking"
 _ARABS = "human_situations:sectors:arabs"

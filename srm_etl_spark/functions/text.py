@@ -253,41 +253,6 @@ def with_lang_id(df, text_col: str = "text", out_col: str = "lang_pred"):
     return d.drop(*[c for c in d.columns if c.startswith("_li_")])
 
 
-def lang_id(text: Column) -> Column:
-    """Single-column variant of :func:`with_lang_id` for literals/tests.
-
-    Prefer :func:`with_lang_id` in pipelines — see its note on expression-tree
-    duplication.
-    """
-    cjk = F.length(F.regexp_replace(text, r"[^一-鿿]", ""))
-    hebrew = F.length(F.regexp_replace(text, r"[^֐-׿]", ""))
-    arabic = F.length(F.regexp_replace(text, r"[^؀-ۿ]", ""))
-    cyrillic = F.length(F.regexp_replace(text, r"[^Ѐ-ӿ]", ""))
-    toks = F.array_distinct(tokens(F.lower(text)))
-
-    def _vote(markers):
-        return F.size(F.array_intersect(toks, F.lit(markers).cast("array<string>")))
-
-    votes = {lang: _vote(markers) for lang, markers in _LANG_MARKERS.items()}
-    best_latin = (
-        F.when(
-            (votes["de"] > votes["en"]) & (votes["de"] >= votes["fr"]) & (votes["de"] >= votes["es"]),
-            F.lit("de"),
-        )
-        .when((votes["fr"] > votes["en"]) & (votes["fr"] >= votes["es"]), F.lit("fr"))
-        .when(votes["es"] > votes["en"], F.lit("es"))
-        .when(votes["en"] > 0, F.lit("en"))
-        .otherwise(F.lit("und"))
-    )
-    return (
-        F.when(cjk > 0, F.lit("zh"))
-        .when(hebrew > 0, F.lit("he"))
-        .when(arabic > 0, F.lit("ar"))
-        .when(cyrillic > 0, F.lit("ru"))
-        .otherwise(best_latin)
-    )
-
-
 # Fingerprinting / shingling --------------------------------------------------
 
 def normalized_text(text: Column) -> Column:

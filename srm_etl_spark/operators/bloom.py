@@ -84,19 +84,6 @@ def _probe_expr(key: Column, arr: Column, num_bits: int, k: int) -> Column:
     return conds
 
 
-def bloom_might_contain(
-    key_col: str, words: list[int], num_bits: int, k: int = 4
-) -> Column:
-    """Codegen probe predicate: true iff every seeded bit is set.
-
-    Inlines the word array as a plan literal — right for filters up to
-    ~2^17 bits (2 KiB of longs). Beyond that the literal dominates plan
-    analysis/serialization (a 2^20-bit filter is a 16 K-element literal and
-    ~1 MiB task binaries); use :func:`with_bloom_probe`, which switches to a
-    broadcast word table automatically."""
-    return _probe_expr(F.col(key_col).cast("string"), F.lit(words), num_bits, k)
-
-
 # Literal-inline cutoff: 2^11 longs = 2^17 bits = 16 KiB. Below, the filter
 # rides in the expression tree and sits directly on the scan; above, it ships
 # once per executor as a broadcast single-row table.

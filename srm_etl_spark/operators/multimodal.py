@@ -161,10 +161,8 @@ def _png_unfilter(raw: bytes, w: int, h: int, bpp: int):
 def _png_parse(data: bytes):
     """Parse a PNG container → (w, h, ctype, (h, w, bpp) uint8 pixel array).
 
-    The ONE parser behind both :func:`decode_image_features` and
-    :func:`resize_images` — chunk walk, IHDR unpack, zlib inflate,
-    unfiltering, shape validation all live here so the two stages can never
-    drift apart."""
+    The parser behind :func:`decode_image_features` — chunk walk, IHDR
+    unpack, zlib inflate, unfiltering, shape validation."""
     import struct  # noqa: PLC0415
     import zlib  # noqa: PLC0415
 
@@ -300,9 +298,6 @@ def _sample_frame_offsets(size_bytes: int, n_frames: int) -> list[int]:
 
 
 # --- MP4 container: real stdlib box parse + minimal valid synthesizer --------
-
-_MP4_CONTAINERS = {b"moov", b"trak", b"mdia", b"minf", b"stbl", b"dinf", b"edts"}
-
 
 def _mp4_boxes(data: bytes, start: int, end: int):
     """Yield (tag, payload_start, payload_end) for the boxes in [start, end).
@@ -607,65 +602,6 @@ def sample_video_frames(df: DataFrame, bin_col: str = "media", n_frames: int = 4
     return with_id.select("media_content_id", bin_col).mapInPandas(batches, FRAME_SAMPLE_SCHEMA)
 
 
-# --- resize (STUB kernel, real Arrow plumbing) -------------------------------
-
-RESIZE_SCHEMA = "media_content_id string, media binary, width int, height int, resize_error string"
-
-
-def _resize_png_bytes(data: bytes, target_w: int, target_h: int) -> bytes:
-    """REAL resize: shared PNG parse (:func:`_png_parse`) → nearest-neighbor
-    resample of EVERY channel (numpy index grid) → stdlib re-encode with the
-    INPUT color type, so RGB/RGBA inputs stay RGB/RGBA (the reference kernel,
-    PIL ``Image.resize``, preserves the image mode)."""
-    import numpy as np  # noqa: PLC0415
-
-    w, h, ctype, px = _png_parse(data)
-    ys = (np.arange(target_h) * h // target_h).clip(0, h - 1)
-    xs = (np.arange(target_w) * w // target_w).clip(0, w - 1)
-    return png_encode(px[np.ix_(ys, xs)], ctype)
-
-
-def resize_images(
-    df: DataFrame, bin_col: str = "media", target_w: int = 64, target_h: int = 64
-) -> DataFrame:
-    """Resize: binary in → binary out through an Arrow batch stage.
-
-    REAL kernel: stdlib PNG decode → nearest-neighbor resample → stdlib PNG
-    re-encode (PIL's ``Image.resize`` takes over when importable inside
-    ``_decode_image_bytes``-style upgrades; the stdlib path needs nothing).
-    Undecodable bytes report ``resize_error`` instead of failing the stage.
-    Bytes stay in Arrow buffers between stages, and the output is itself a
-    valid input to :func:`decode_image_features`.
-    """
-
-    with_id = df.withColumn("media_content_id", F.sha1(F.col(bin_col)))
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                "media_content_id": [],
-                "media": [],
-                "width": [],
-                "height": [],
-                "resize_error": [],
-            }
-            for cid, data in zip(pdf["media_content_id"], pdf[bin_col]):
-                out["media_content_id"].append(cid)
-                try:
-                    out["media"].append(_resize_png_bytes(bytes(data), target_w, target_h))
-                    out["width"].append(target_w)
-                    out["height"].append(target_h)
-                    out["resize_error"].append(None)
-                except Exception as ex:  # noqa: BLE001
-                    out["media"].append(None)
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["resize_error"].append(type(ex).__name__)
-            yield pd.DataFrame(out)
-
-    return with_id.select("media_content_id", bin_col).mapInPandas(batches, RESIZE_SCHEMA)
-
-
 # --- audio codec: real stdlib RIFF/WAVE PCM ----------------------------------
 
 def _wav_from_pcm(sample_rate: int, pcm: bytes) -> bytes:
@@ -677,14 +613,6 @@ def _wav_from_pcm(sample_rate: int, pcm: bytes) -> bytes:
     body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
     body += b"data" + struct.pack("<I", len(pcm)) + pcm
     return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def wav_encode_pcm16(sample_rate: int, samples) -> bytes:
-    """Encode int16 mono samples as a REAL RIFF/WAVE PCM file (44-byte
-    canonical header + little-endian data chunk)."""
-    import numpy as np  # noqa: PLC0415
-
-    return _wav_from_pcm(sample_rate, np.asarray(samples, dtype="<i2").tobytes())
 
 
 def make_wav(sample_rate: int, n_samples: int, amp_byte: int = 100) -> bytes:

@@ -230,78 +230,3 @@ def implements_merge(
     )
 
 
-# P5b — manual-override shadow columns (reference operators/derive/helpers.py:155-157)
-
-def resolve_manual_overrides(df: DataFrame, overrides: dict[str, str]) -> DataFrame:
-    """Curator columns shadow scraped values: ``{"name": "name_manual", ...}``
-    replaces each target with its manual twin when the twin is present.
-
-    Reference semantics are Python truthiness (``row['name_manual'] or v``,
-    helpers.py:155-157): None, '' and [] all mean "no override" — so the
-    predicate is type-aware (length/size > 0), not a bare isNotNull. The
-    manual columns are dropped afterwards, as the reference's delete_fields
-    does (helpers.py:171).
-    """
-    from pyspark.sql.types import ArrayType, StringType  # noqa: PLC0415
-
-    out = df
-    for target, manual in overrides.items():
-        m = F.col(manual)
-        dtype = df.schema[manual].dataType
-        if isinstance(dtype, StringType):
-            present = m.isNotNull() & (F.length(m) > 0)
-        elif isinstance(dtype, ArrayType):
-            present = m.isNotNull() & (F.size(m) > 0)
-        else:
-            present = m.isNotNull()
-        out = out.withColumn(target, F.when(present, m).otherwise(F.col(target)))
-    return out.drop(*overrides.values())
-
-
-# J6b — tag-mapping join with curator feedback
-# (reference operators/entities/__init__.py:325-346)
-
-def map_tags_with_feedback(
-    df: DataFrame,
-    mapping: DataFrame,
-    key_col: str,
-    tags_col: str = "tags",
-) -> tuple[DataFrame, DataFrame]:
-    """Map scraped tag names through a curated mapping table, returning
-    ``(enriched, unknown_tags)``.
-
-    The reference resolves each tag via an in-memory dict; tags with no
-    mapping are counted, treated as empty, and *written back* to the mapping
-    table as empty rows so curators see exactly what needs mapping — a
-    feedback loop this engine preserves: ``unknown_tags`` is one distinct
-    name per missing mapping, ready for the K4/K6 upsert writers.
-
-    Shape: explode tags → ONE broadcast left join against the mapping (the
-    mapping is curator-sized at any corpus scale) → re-aggregate per row with
-    sorted-distinct unions. Unknown detection falls out of the same join
-    (null-mapped rows), so no second pass over the data.
-    """
-    tagged = df.select(
-        F.col(key_col).alias("_k"), F.explode_outer(F.col(tags_col)).alias("_tag")
-    )
-    m = mapping.select(
-        F.col("name").alias("_tag"),
-        F.coalesce(F.col("response_ids"), F.array()).alias("_resp"),
-        F.coalesce(F.col("situation_ids"), F.array()).alias("_sit"),
-    )
-    joined = tagged.join(F.broadcast(m), "_tag", "left")
-    unknown = (
-        joined.filter(F.col("_tag").isNotNull() & F.col("_resp").isNull())
-        .select(F.col("_tag").alias("name"))
-        .distinct()
-    )
-    per_row = joined.groupBy("_k").agg(
-        F.array_sort(
-            F.array_distinct(F.flatten(F.collect_list(F.coalesce(F.col("_resp"), F.array()))))
-        ).alias("response_ids"),
-        F.array_sort(
-            F.array_distinct(F.flatten(F.collect_list(F.coalesce(F.col("_sit"), F.array()))))
-        ).alias("situation_ids"),
-    )
-    enriched = df.join(per_row, df[key_col] == per_row._k, "left").drop("_k")
-    return enriched, unknown

@@ -21,7 +21,7 @@ pick ``salt`` ≈ (hot-key rows / target partition rows).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _SALT = "_skew_salt"
@@ -53,36 +53,6 @@ def salted_join(
         _SALT, F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
     ).withColumn(_SALT, F.col(_SALT).cast("bigint"))
     return big_salted.join(small_replicated, [*keys, _SALT], how).drop(_SALT)
-
-
-def salted_sum_count(
-    df: DataFrame,
-    keys: list[str],
-    sum_cols: dict[str, Column] | None = None,
-    salt: int = 32,
-) -> DataFrame:
-    """Two-stage aggregation for heavy-hitter groups: partial sums/counts per
-    (key, salt), then merge per key. Spark's hash aggregate already does
-    map-side partial aggregation, so this explicit form only pays off when
-    the *reduce*-side per-group state is the bottleneck (huge groups +
-    spilling) — it exists mainly as the documented pattern and for
-    composition with ``collect``-style aggs that have no partial form.
-
-    ``sum_cols``: name -> column expression to sum. Count of rows is always
-    emitted as ``n``.
-    """
-    sum_cols = sum_cols or {}
-    salted = df.withColumn(
-        _SALT, F.pmod(F.monotonically_increasing_id(), F.lit(salt))
-    )
-    partial = salted.groupBy(*keys, _SALT).agg(
-        F.count(F.lit(1)).alias("_n"),
-        *[F.sum(expr).alias(f"_s_{name}") for name, expr in sum_cols.items()],
-    )
-    return partial.groupBy(*keys).agg(
-        F.sum("_n").alias("n"),
-        *[F.sum(f"_s_{name}").alias(name) for name in sum_cols],
-    )
 
 
 def skew_report(

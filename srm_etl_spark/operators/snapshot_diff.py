@@ -52,27 +52,3 @@ def snapshot_diff(
     ).filter(F.col("change").isNotNull())
 
 
-def snapshot_patch(
-    old: DataFrame, new: DataFrame, key_col: str, compare_cols: list[str] | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """The minimal write set between two snapshots: (upserts, delete_keys).
-
-    ``upserts`` is the NEW rows for every added/changed key; ``delete_keys``
-    the removed keys — exactly what an incremental publisher (ES bulk +
-    delete_by_query, the Airtable batch upserter, a JDBC MERGE) writes
-    instead of the whole table. Applying the patch to the old snapshot
-    reconstructs the new one row-for-row (property-tested).
-
-    The diff (the expensive full-outer hash join) is persisted via a session
-    slot: both returned frames read it, and without the persist each
-    materialization would re-run both snapshot scans and the join.
-    """
-    from .session_cache import keep_persisted  # noqa: PLC0415
-
-    d = keep_persisted(
-        snapshot_diff(old, new, key_col, compare_cols), "snapshot_patch_diff"
-    )
-    upsert_keys = d.filter(F.col("change").isin("added", "changed")).select(key_col)
-    upserts = new.join(upsert_keys, key_col, "left_semi")
-    delete_keys = d.filter(F.col("change") == "removed").select(key_col)
-    return upserts, delete_keys

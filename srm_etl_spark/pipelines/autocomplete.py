@@ -34,7 +34,7 @@ does.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.taxonomy import update_taxonomy_with_parents

@@ -91,7 +91,7 @@ def training_corpus_stages(
         quality_score_from_counts,
         with_quality_flags,
     )
-    from ..operators.decontaminate import contamination_report  # noqa: PLC0415
+    from ..operators.decontaminate import decontaminate  # noqa: PLC0415
     from ..operators.dedup import minhash_dedup  # noqa: PLC0415
     from ..operators.session_cache import keep_checkpointed_pooled  # noqa: PLC0415
     from ..operators.windows import top_k_per_group  # noqa: PLC0415
@@ -132,8 +132,7 @@ def training_corpus_stages(
         )
     )
     qual = _pin(with_quality_flags(near, "text").filter(F.col("keep")))
-    dirty = contamination_report(qual, eval_df, n=3, min_overlap=2).select("doc_id")
-    clean = _pin(qual.join(dirty, "doc_id", "left_anti"))
+    clean = _pin(decontaminate(qual, eval_df, n=3, min_overlap=2))
     stages_extra: dict[str, DataFrame] = {}
     selected = clean
     if dsir_k is not None:

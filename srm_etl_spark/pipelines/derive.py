@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import hasher
 from ..functions.taxonomy import update_taxonomy_with_parents
+from ..operators.windows import first_per_group
 from . import staging_fixtures as FIX
 
 # reference operators/derive/autocomplete.py:35-38 (shared with to_dp.py's
@@ -66,12 +67,7 @@ def flat_branches(
     joined = b.join(F.broadcast(loc), "location", "left").join(
         F.broadcast(org), "organization", "inner"
     )
-    dup_w = Window.partitionBy("organization", "location").orderBy(F.asc("id"))
-    merged = (
-        joined.withColumn("_rn", F.row_number().over(dup_w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    merged = first_per_group(joined, ["organization", "location"], [F.asc("id")])
     count_w = Window.partitionBy("organization")
     return merged.withColumn(
         "organization_branch_count", F.count(F.lit(1)).over(count_w)
@@ -137,8 +133,7 @@ def flat_table(flat_services_df: DataFrame, flat_branches_df: DataFrame) -> Data
     joined = flat_services_df.join(
         F.broadcast(flat_branches_df.drop("organization")), "branch_id", "inner"
     )
-    w = Window.partitionBy("service_id", "branch_id").orderBy(F.asc("service_name"))
-    return joined.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
+    return first_per_group(joined, ["service_id", "branch_id"], [F.asc("service_name")])
 
 
 def card_data(flat_table_df: DataFrame, autotag_rules: DataFrame | None = None) -> DataFrame:
@@ -724,8 +719,7 @@ def card_search(
 
     At 100× scale this is the difference between computing the whole cards
     fan-out to return a handful of rows and never materializing out-of-city
-    branches at all. (The written-table equivalent is a
-    ``write_clustered``-partitioned card_data read with partition pruning.)
+    branches at all.
     """
     orgs = FIX.organizations(spark, sf_dir)
     locs = FIX.locations(spark, sf_dir)

@@ -396,9 +396,3 @@ def _starts(prefix: str):
     return lambda n: n.startswith(prefix)
 
 
-def place_bounds_package(places: DataFrame) -> DataFrame:
-    """The location-bounds datapackage shape the consumers load
-    (autocomplete.py:44-56 / to_es.py:186-196): key, name[], bounds[4],
-    place — exactly what ``es_publish.places_surface`` and the autocomplete
-    city-bounds lookup take."""
-    return places.select("key", "name", "bounds", "place")

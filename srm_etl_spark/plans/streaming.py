@@ -111,24 +111,17 @@ def q53_stream_tumbling(spark, sf_dir):
         run_to_memory,
         source_bytes_of,
         stream_events,
+        tumbling_window_counts,
     )
 
     name = f"q53_sink_{next(_SINK_IDS)}"
 
     def build(s):
-        return (
-            s.withWatermark("ts", "4 hours")
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
-            )
-            .select(
-                F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-                "event_type",
-                "n",
-                "sum_value",
-            )
+        return tumbling_window_counts(s, "1 hour", watermark="4 hours").select(
+            F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+            "event_type",
+            "n",
+            "sum_value",
         )
 
     # SPARK_GRAFT_STREAM_RECOVERY=1: kill-and-resume invariance axis —
@@ -463,6 +456,7 @@ def q88_stream_sessions(spark, sf_dir):
 
     from ..streaming.events import (  # noqa: PLC0415
         run_to_memory,
+        session_window_counts,
         source_bytes_of,
         stream_events,
     )
@@ -470,20 +464,12 @@ def q88_stream_sessions(spark, sf_dir):
     name = f"q88_sink_{next(_SINK_IDS)}"
 
     def build(s):
-        return (
-            s.withWatermark("ts", "4 hours")
-            .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
-            )
-            .select(
-                F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-                F.date_format(F.col("w.end"), "yyyy-MM-dd HH:mm:ss").alias("session_end"),
-                F.col("user_id").cast("long").alias("user_id"),
-                F.col("n_events").cast("long").alias("n_events"),
-                "sum_value",
-            )
+        return session_window_counts(s, "30 minutes", watermark="4 hours").select(
+            F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
+            F.date_format("session_end", "yyyy-MM-dd HH:mm:ss").alias("session_end"),
+            F.col("user_id").cast("long").alias("user_id"),
+            F.col("n_events").cast("long").alias("n_events"),
+            "sum_value",
         )
 
     # SPARK_GRAFT_STREAM_RECOVERY=1: kill-and-resume for SESSION-WINDOW

@@ -9,7 +9,7 @@ no driver-side row loops, so they hold at any output size.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -19,85 +19,6 @@ def write_parquet_stage(df: DataFrame, path: str, partition_by: list[str] | None
     if partition_by:
         w = w.option("partitionOverwriteMode", "dynamic").partitionBy(*partition_by)
     w.parquet(path)
-
-
-def write_clustered(
-    df: DataFrame,
-    path: str,
-    cluster_cols: list[str],
-    target_files: int | None = None,
-) -> None:
-    """Layout-clustered parquet write: range-partition on ``cluster_cols``
-    (e.g. a z-order key from plans/relational.q70_zorder_key) and sort
-    within partitions, so each output file covers a narrow, non-overlapping
-    key range and parquet min/max row-group stats prune scans on the
-    clustered dimensions. This is the write side of Delta/Iceberg
-    ``OPTIMIZE ZORDER`` expressed with stock Spark primitives.
-
-    ``target_files`` controls file count (defaults to the session's shuffle
-    parallelism via ``repartitionByRange``'s default); at 100 TB pick
-    ``total_bytes / ~512 MB``.
-    """
-    cols = [F.col(c) for c in cluster_cols]
-    parted = (
-        df.repartitionByRange(target_files, *cols)
-        if target_files
-        else df.repartitionByRange(*cols)
-    )
-    parted.sortWithinPartitions(*cols).write.mode("overwrite").parquet(path)
-
-
-def compact_parquet(
-    spark,
-    path: str,
-    target_file_bytes: int = 512 * 1024 * 1024,
-    sort_cols: list[str] | None = None,
-) -> int:
-    """Small-file compaction: rewrite a parquet directory into
-    ``ceil(total_bytes / target_file_bytes)`` files (optionally re-sorted),
-    publish via write-new-then-swap. Returns the output file count.
-
-    Streaming micro-batches, per-partition upserts, and over-parallel writes
-    all accumulate small files; at warehouse scale the resulting
-    footer/open-cost per scan dominates. Compaction is maintenance, not a
-    query — scheduled like the reference schedules its pipelines. The swap
-    (write to ``<path>.__compact__``, rename live aside to ``<path>.__old__``,
-    promote, delete old) is crash-safe — a copy survives at every step — and
-    shrinks the reader no-data window to one rename (not atomic for
-    concurrent readers; object stores or table formats replace the rename
-    with their own commit).
-    """
-    import math  # noqa: PLC0415
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-
-    total = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _, files in os.walk(path)
-        for f in files
-        if f.endswith(".parquet")
-    )
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path)
-    if sort_cols:
-        cols = [F.col(c) for c in sort_cols]
-        df = df.repartitionByRange(n_files, *cols).sortWithinPartitions(*cols)
-    else:
-        df = df.coalesce(n_files)
-    tmp = f"{path.rstrip('/')}.__compact__"
-    old = f"{path.rstrip('/')}.__old__"
-    df.write.mode("overwrite").parquet(tmp)
-    # publish: move the live dir aside, promote the new one, then delete the
-    # old — a crash at any point leaves a recoverable copy (under __old__ or
-    # __compact__) and the no-data window is a single rename, not a full
-    # rmtree. rmtree-then-rename would lose the dataset on a crash between
-    # the two calls.
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return n_files
 
 
 def geojson_features(

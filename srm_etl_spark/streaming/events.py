@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from contextlib import contextmanager as _contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -110,16 +110,21 @@ def stream_events(
     return df
 
 
+def _exact_sum(col: str) -> Column:
+    return F.sum(F.col(col).cast("decimal(18,6)")).cast("double").alias("sum_value")
+
+
 def tumbling_window_counts(
     events: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
 ) -> DataFrame:
     """Per (tumbling window, event_type) count + value sum. The streaming twin
     of q32 — identical plan, plus the watermark that lets Spark finalize and
-    evict window state."""
+    evict window state. The sum runs in DECIMAL(18,6), so it is exact and
+    independent of the order the micro-batches add up in."""
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
+        .agg(F.count(F.lit(1)).alias("n"), _exact_sum("value"))
         .select(
             F.col("w.start").alias("window_start"),
             F.col("w.end").alias("window_end"),
@@ -139,7 +144,7 @@ def session_window_counts(
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
+        .agg(F.count(F.lit(1)).alias("n_events"), _exact_sum("value"))
         .select(
             F.col("w.start").alias("session_start"),
             F.col("w.end").alias("session_end"),

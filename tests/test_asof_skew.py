@@ -5,7 +5,7 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from srm_etl_spark.operators.asof import asof_join
-from srm_etl_spark.operators.skew import salted_join, salted_sum_count
+from srm_etl_spark.operators.skew import salted_join
 
 
 def _ts(s):
@@ -78,19 +78,6 @@ def test_salted_join_matches_plain_join(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("n"))
     )
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
-def test_salted_sum_count(spark):
-    df = spark.createDataFrame(
-        [("a", 1.0)] * 100 + [("b", 2.0)] * 3, "k string, v double"
-    )
-    out = {
-        r.k: (r.n, r.total)
-        for r in salted_sum_count(
-            df, ["k"], {"total": F.col("v")}, salt=8
-        ).collect()
-    }
-    assert out == {"a": (100, 100.0), "b": (3, 6.0)}
 
 
 def test_skew_report_identifies_heavy_key(spark):

@@ -4,10 +4,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from srm_etl_spark.operators.bloom import (
-    bloom_might_contain,
     bloom_prefilter,
     bloom_semi_join,
     build_bloom,
+    with_bloom_probe,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -42,7 +42,7 @@ def test_bloom_prunes_most_non_members(spark):
     members = spark.range(100).selectExpr("id AS k")
     words = build_bloom(members, "k", num_bits=1 << 14)
     probe = spark.range(100000, 110000).selectExpr("id AS k")  # disjoint range
-    survivors = probe.filter(bloom_might_contain("k", words, 1 << 14)).count()
+    survivors = with_bloom_probe(probe, "k", words, 1 << 14).filter("_bloom_maybe").count()
     # 2^14 bits / 100 keys: false-positive rate well under 1%
     assert survivors < 100
 

@@ -77,14 +77,6 @@ def test_update_taxonomy_with_parents_sub2_segments(spark):
     assert got == ["a:b"]
 
 
-def test_merge_array_fields(spark):
-    df = spark.createDataFrame(
-        [(["b", "a"], None, ["a", "c"])], "x array<string>, y array<string>, z array<string>"
-    )
-    got = df.select(taxonomy.merge_array_fields("x", "y", "z").alias("out")).first()["out"]
-    assert got == ["a", "b", "c"]
-
-
 def test_fix_situations_rules(spark):
     men_women = [
         "human_situations:gender:women",
@@ -212,10 +204,15 @@ def test_token_count(spark):
 
 
 def test_lang_id(spark):
-    assert _one(spark, text.lang_id(F.lit("the cat and the dog is here"))) == "en"
-    assert _one(spark, text.lang_id(F.lit("der hund und die katze ist"))) == "de"
-    assert _one(spark, text.lang_id(F.lit("שלום עולם"))) == "he"
-    assert _one(spark, text.lang_id(F.lit("你好世界"))) == "zh"
+    texts = {
+        "the cat and the dog is here": "en",
+        "der hund und die katze ist": "de",
+        "שלום עולם": "he",
+        "你好世界": "zh",
+    }
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    got = {r.text: r.lang_pred for r in text.with_lang_id(df).collect()}
+    assert got == texts
 
 
 def test_word_shingles(spark):

@@ -106,46 +106,6 @@ def test_implements_merge(spark):
     assert kept == {("s1", "o2"), ("s9", "o1"), ("s2", "o1")}
 
 
-def test_resolve_manual_overrides(spark):
-    from srm_etl_spark.operators.relational import resolve_manual_overrides
-
-    df = spark.createDataFrame(
-        [
-            ("scraped", "Manual", ["a"], ["m1"]),
-            ("scraped", None, ["a"], None),
-            ("scraped", "", ["a"], []),  # empty string/array = no override
-        ],
-        "name string, name_manual string, tags array<string>, tags_manual array<string>",
-    )
-    out = resolve_manual_overrides(
-        df, {"name": "name_manual", "tags": "tags_manual"}
-    ).collect()
-    assert [r.name for r in out] == ["Manual", "scraped", "scraped"]
-    assert [r.tags for r in out] == [["m1"], ["a"], ["a"]]
-    assert "name_manual" not in out[0].asDict()
-
-
-def test_map_tags_with_feedback(spark):
-    from srm_etl_spark.operators.relational import map_tags_with_feedback
-
-    df = spark.createDataFrame(
-        [("s1", ["tagA", "tagB", "ghost"]), ("s2", ["ghost", "phantom"]), ("s3", [])],
-        "id string, tags array<string>",
-    )
-    mapping = spark.createDataFrame(
-        [("tagA", ["r1", "r2"], ["s1"]), ("tagB", ["r2"], None)],
-        "name string, response_ids array<string>, situation_ids array<string>",
-    )
-    enriched, unknown = map_tags_with_feedback(df, mapping, "id")
-    rows = {r.id: r for r in enriched.collect()}
-    assert rows["s1"].response_ids == ["r1", "r2"]
-    assert rows["s1"].situation_ids == ["s1"]
-    assert rows["s2"].response_ids == []  # unknown tags map to empty
-    assert rows["s3"].response_ids == []  # no tags at all
-    # the curator write-back set: each missing mapping exactly once
-    assert sorted(r.name for r in unknown.collect()) == ["ghost", "phantom"]
-
-
 def test_resolve_entities(spark):
     from pyspark.sql import functions as F
 

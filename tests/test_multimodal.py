@@ -13,6 +13,7 @@ from srm_etl_spark.operators.multimodal import (
     _decode_audio_bytes,
     _decode_image_bytes,
     _png_chunk,
+    _wav_from_pcm,
     _PNG_SIG,
     attach_media_metadata,
     decode_image_features,
@@ -20,7 +21,6 @@ from srm_etl_spark.operators.multimodal import (
     make_wav,
     png_encode_gray,
     sample_video_frames,
-    wav_encode_pcm16,
 )
 
 np = pytest.importorskip("numpy")
@@ -135,56 +135,6 @@ def test_frame_sampling_udtf_shape(spark):
     assert all(r.byte_offset == 0 for r in offs)
 
 
-def test_resize_roundtrips_through_decoder(spark):
-    from srm_etl_spark.operators.multimodal import resize_images
-
-    resized = resize_images(_media_df(spark), target_w=32, target_h=16)
-    # output binary is itself a real PNG: decodable, dims replaced,
-    # two-tone luminance preserved by the nearest-neighbor resample
-    feats = decode_image_features(resized.filter(F.col("resize_error").isNull())).collect()
-    assert len(feats) == 2
-    assert all((r.width, r.height) == (32, 16) for r in feats)
-    lums = sorted(round(r.mean_luminance, 4) for r in feats)
-    assert lums == sorted(
-        round(_two_tone_mean(16, x), 4) for x in (100, 200)
-    )
-    # undecodable inputs surface on the error channel, not as task failures
-    errs = resize_images(_media_df(spark)).filter(F.col("resize_error").isNotNull()).collect()
-    assert len(errs) >= 1 and all(r.media is None for r in errs)
-
-
-def test_resize_preserves_color_mode(spark):
-    """RGB/RGBA inputs must come back RGB/RGBA (PIL Image.resize preserves
-    the mode) — the stdlib path resamples every channel, not the luminance
-    plane."""
-    import numpy as np
-
-    from srm_etl_spark.operators.multimodal import (
-        _png_parse,
-        png_encode,
-        resize_images,
-    )
-
-    rgb = np.zeros((8, 8, 3), dtype=np.uint8)
-    rgb[:, :, 0] = 200  # red-dominant so a luminance collapse is detectable
-    rgb[:, :, 2] = 10
-    rgba = np.dstack([rgb, np.full((8, 8), 77, dtype=np.uint8)])
-    df = spark.createDataFrame(
-        [(1, png_encode(rgb, 2)), (2, png_encode(rgba, 6))], "id long, media binary"
-    )
-    out = resize_images(df, target_w=4, target_h=4).collect()
-    assert all(r.resize_error is None for r in out)
-    ctypes = set()
-    for r in out:
-        w, h, ctype, px = _png_parse(bytes(r.media))
-        ctypes.add(ctype)
-        assert (w, h) == (4, 4)
-        assert (px[:, :, 0] == 200).all() and (px[:, :, 2] == 10).all()
-        if ctype == 6:
-            assert (px[:, :, 3] == 77).all()
-    assert ctypes == {2, 6}
-
-
 def test_audio_features_and_error_channel(spark):
     from srm_etl_spark.operators.multimodal import decode_audio_features
 
@@ -200,6 +150,11 @@ def test_audio_features_and_error_channel(spark):
     assert a.doc_id == 1
     bad = out[hashlib.sha1(b"junk").hexdigest()]
     assert bad.sample_rate is None and bad.decode_error == "ValueError"
+
+
+def wav_encode_pcm16(sample_rate, samples):
+    """A REAL RIFF/WAVE PCM16 file (44-byte header + little-endian data)."""
+    return _wav_from_pcm(sample_rate, np.asarray(samples, dtype="<i2").tobytes())
 
 
 def test_wav_codec_roundtrip_exact():

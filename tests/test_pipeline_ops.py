@@ -466,28 +466,3 @@ def test_snapshot_diff_verdicts(spark):
     assert {r.k: r.change for r in narrowed} == {3: "removed", 4: "added"}
 
 
-def test_snapshot_patch_reconstructs_new(spark):
-    from srm_etl_spark.operators.snapshot_diff import snapshot_patch
-
-    old = spark.createDataFrame(
-        [(i, f"v{i}", float(i)) for i in range(50)], "k long, s string, v double"
-    )
-    # new: drop %7 keys, modify %5 values, add 5 fresh keys
-    new = (
-        old.filter(F.col("k") % 7 != 0)
-        .withColumn("v", F.when(F.col("k") % 5 == 0, F.col("v") + 0.5).otherwise(F.col("v")))
-        .unionByName(
-            spark.createDataFrame(
-                [(100 + i, f"n{i}", -1.0) for i in range(5)], "k long, s string, v double"
-            )
-        )
-    )
-    upserts, deletes = snapshot_patch(old, new, "k")
-    # apply: old minus (deleted + upserted keys) plus upserts == new
-    touched = upserts.select("k").unionByName(deletes)
-    applied = old.join(touched, "k", "left_anti").unionByName(upserts)
-    assert applied.count() == new.count()
-    assert applied.exceptAll(new).count() == 0
-    assert new.exceptAll(applied).count() == 0
-    # the patch is minimal: unchanged rows are not rewritten
-    assert upserts.filter((F.col("k") % 5 != 0) & (F.col("k") < 100)).count() == 0

@@ -1,21 +1,15 @@
 """Unit tests for the OSM place-bounds generator twin
 (pipelines/places_osm.py, reference data-analysis/osm/generate_places.py).
-The composed pipeline is oracle-gated as q163; these pin the hstore escaping,
-the fix_osm_name chain goldens, and the produced package's round-trip into
-the bounds consumers (autocomplete city lookup + the places ES flow)."""
+The composed pipeline is oracle-gated as q163; these pin the hstore escaping
+and the fix_osm_name chain goldens."""
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from srm_etl_spark.pipelines.places_osm import (
     fix_osm_name,
-    generate_place_bounds,
     hstore_escape,
     is_heb,
-    official_places,
-    osm_features,
     parse_hstore,
-    place_bounds_package,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -65,49 +59,3 @@ def test_is_heb(spark):
     assert got == cases
 
 
-def test_package_round_trips_into_consumers(spark):
-    st = generate_place_bounds(
-        osm_features(spark, SF), official_places(spark, SF)
-    )
-    pkg = place_bounds_package(st["places"])
-    rows = pkg.collect()
-    assert rows, "generator produced no package rows"
-    assert set(pkg.columns) == {"key", "name", "bounds", "place"}
-    for r in rows[:5]:
-        w, s, e, n = r["bounds"]
-        assert w < e and s < n  # a real bbox
-
-    # 1) the places ES flow's concatenate (to_es.py:193-196): the package is
-    # schema-compatible with the PREDEFINED literal rows
-    from srm_etl_spark.pipelines.es_publish import PREDEFINED_PLACES
-
-    pre = spark.createDataFrame(
-        PREDEFINED_PLACES,
-        "key string, name array<string>, bounds array<double>, place string",
-    )
-    both = pkg.unionByName(pre)
-    assert both.count() == len(rows) + 4
-
-    # 2) the autocomplete city-bounds lookup (autocomplete.py:141-162):
-    # package rows become the bounds dimension and a city query resolves
-    from srm_etl_spark.pipelines.autocomplete import autocomplete_corpus
-
-    city = rows[0]["name"][0]
-    bounds_dim = pkg.select(
-        F.element_at("name", 1).alias("bkey"),
-        F.row_number().over(Window.orderBy("key")).alias("bnk"),
-        F.format_string(
-            "[%.5f,%.5f,%.5f,%.5f]",
-            F.element_at("bounds", 1), F.element_at("bounds", 2),
-            F.element_at("bounds", 3), F.element_at("bounds", 4),
-        ).alias("bounds"),
-    )
-    cards = spark.createDataFrame(
-        [(["r:a"], ["s:a:b:c"], ["r:a"], ["s:a:b:c"], "ארגון", city, 9)],
-        "direct_responses array<string>, direct_situations array<string>, "
-        "responses_parents array<string>, situations_parents array<string>, "
-        "org_name string, branch_city string, organization_branch_count int",
-    )
-    out = autocomplete_corpus(cards, bounds_dim).collect()
-    resolved = [r for r in out if r["city_name"] == city]
-    assert resolved and all(r["bounds"] is not None for r in resolved)

@@ -179,10 +179,10 @@ def test_png_roundtrip_property(pixels):
 def test_wav_roundtrip_property(samples, sr):
     import numpy as np
 
-    from srm_etl_spark.operators.multimodal import _decode_audio_bytes, wav_encode_pcm16
+    from srm_etl_spark.operators.multimodal import _decode_audio_bytes, _wav_from_pcm
 
     arr = np.array(samples, dtype=np.int16)
-    got_sr, n, rms = _decode_audio_bytes(wav_encode_pcm16(sr, arr))
+    got_sr, n, rms = _decode_audio_bytes(_wav_from_pcm(sr, arr.astype("<i2").tobytes()))
     assert (got_sr, n) == (sr, len(samples))
     want = float(np.sqrt((arr.astype(np.float64) ** 2).mean()) / 32768.0)
     assert abs(rms - want) < 1e-12

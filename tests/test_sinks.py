@@ -192,52 +192,6 @@ def test_publish_ensures_index_with_revision_mapping(spark):
     assert props["service_name"]["fields"] == {"hebrew": {"type": "text", "analyzer": "hebrew"}}
 
 
-def test_write_clustered_disjoint_ranges(spark, tmp_path):
-    """Clustered write: per-file zval ranges must not overlap, so min/max
-    row-group stats can prune scans on the clustered key."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from srm_etl_spark.plans.relational import q70_zorder_key
-    from srm_etl_spark.sinks.files import write_clustered
-
-    z = q70_zorder_key(spark, "/root/testdata/sf0.001")
-    path = str(tmp_path / "clustered")
-    write_clustered(z, path, ["zval"], target_files=4)
-    ranges = []
-    for f in sorted(glob.glob(f"{path}/*.parquet")):
-        md = pq.ParquetFile(f).metadata
-        if md.num_rows == 0:
-            continue
-        names = [md.schema.column(c).name for c in range(len(md.schema))]
-        idx = names.index("zval")
-        stats = md.row_group(0).column(idx).statistics
-        ranges.append((stats.min, stats.max))
-    assert len(ranges) >= 2
-    ranges.sort()
-    for (lo1, hi1), (lo2, _hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2, f"overlapping file ranges: ({lo1},{hi1}) vs ({lo2},..)"
-
-
-def test_compact_parquet(spark, tmp_path):
-    from srm_etl_spark.sinks.files import compact_parquet
-
-    path = str(tmp_path / "many_small")
-    src = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    src.repartition(16).write.parquet(path)
-    import glob
-
-    assert len(glob.glob(f"{path}/*.parquet")) == 16
-    before = src.count()
-    n = compact_parquet(spark, path, target_file_bytes=1 << 30)
-    files = glob.glob(f"{path}/*.parquet")
-    assert len(files) == n == 1
-    after = spark.read.parquet(path)
-    assert after.count() == before
-    assert sorted(after.columns) == sorted(src.columns)
-
-
 def test_mapbox_upload_protocol_contract():
     """K7 (reference operators/derive/to_mapbox.py:23-66): credentials ->
     S3 stage -> create-upload -> poll-to-complete, with the error asserts

@@ -34,7 +34,10 @@ def test_tumbling_counts_match_batch(spark, sf_dir, events_dir):
     batch = (
         load_table(spark, sf_dir, "events")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
+        )
         .select(F.col("w.start").alias("ws"), "event_type", "n", "sum_value")
     )
     want = {(r.ws, r.event_type): (r.n, r.sum_value) for r in batch.collect()}
