@@ -90,10 +90,11 @@ def main() -> None:
         # (r14+) = v2 + the hostload noise bound — dirty (steal-contaminated)
         # reps are re-run within a bounded budget and never reported while a
         # clean rep exists, and the payload carries per-query steal/loadavg.
-        # On a quiet host v3 numbers are v2 numbers, so BENCH_LOCAL_r12/r13
-        # remain valid baselines. Round-over-round per-query comparisons are
-        # valid only within the self-contained family — r11 and earlier
-        # numbers let neighbours' warm pins subsidize a query.
+        # On a quiet host v3 numbers are v2 numbers, so BENCH_LOCAL_r14 and
+        # the BENCH_r12+ files are valid baselines. Round-over-round
+        # per-query comparisons are valid only within the self-contained
+        # family — r11 and earlier numbers let neighbours' warm pins
+        # subsidize a query.
         "methodology": "self-contained-v3",
         # The noise bound: queries whose EVERY rep ran under > STEAL_MAX_PCT
         # co-tenant CPU steal (their timing is not adjudicable from this

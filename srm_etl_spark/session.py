@@ -36,9 +36,7 @@ _SCRATCH_MIN_FREE = 8 << 30
 # executor memory, so even with headroom a long session must not balloon
 # /dev/shm — past the cap new allocations fall back to the tempfile default
 # while existing paths stay readable.
-_SCRATCH_SHM_CAP = int(
-    os.environ.get("SPARK_GRAFT_SCRATCH_SHM_CAP", str(16 << 30))
-)
+_SCRATCH_SHM_CAP = 16 << 30
 
 
 def _scratch_base() -> str | None:
@@ -100,7 +98,7 @@ def scratch_dir(prefix: str = "srm") -> str:
     ``/dev/shm`` headroom on a co-tenant host can evaporate between
     allocations, and tmpfs pages compete with executor memory — so a tmpfs
     that has dropped below the headroom floor, or a session whose own shm
-    usage passed ``SPARK_GRAFT_SCRATCH_SHM_CAP``, sends NEW allocations to
+    usage passed ``_SCRATCH_SHM_CAP`` (16 GiB), sends NEW allocations to
     the tempfile default while previously handed-out paths stay valid."""
     base = _scratch_base()
     if base == "/dev/shm":

@@ -214,6 +214,11 @@ def source_bytes_of(path: str) -> int:
     return _dir_bytes(path)
 
 
+# A Python-stateful stage processes bytes ~1000x slower than a JVM shuffle
+# write, so it sizes its partitions against this fraction of the advisory.
+_PY_STATE_ADVISORY_DIVISOR = 1024
+
+
 @_contextmanager
 def scaled_state_partitions(
     spark: SparkSession, source_bytes: int | None, python_stateful: bool = False
@@ -242,14 +247,12 @@ def scaled_state_partitions(
     advisory starves it of parallelism (measured: q60's replay at one
     byte-derived partition ran its whole per-user loop single-threaded,
     1.5 s → 5-6 s). Such stages size against a proportionally smaller
-    advisory (``SPARK_GRAFT_PY_STATE_ADVISORY``, default advisory/1024 =
-    64 KiB at the 64 MiB default): the same input-derived, cluster-agnostic
-    rule, with the operator's actual processing rate priced in."""
+    advisory (advisory / ``_PY_STATE_ADVISORY_DIVISOR`` = 64 KiB at the
+    64 MiB default): the same input-derived, cluster-agnostic rule, with the
+    operator's actual processing rate priced in."""
     if not source_bytes:
         yield
         return
-    import os  # noqa: PLC0415
-
     from ..session import parse_byte_size  # noqa: PLC0415
 
     conf = spark.conf
@@ -259,9 +262,7 @@ def scaled_state_partitions(
         64 << 20,
     )
     if python_stateful:
-        advisory = parse_byte_size(
-            os.environ.get("SPARK_GRAFT_PY_STATE_ADVISORY", ""), advisory // 1024
-        )
+        advisory //= _PY_STATE_ADVISORY_DIVISOR
     target = max(1, min(cur, -(-int(source_bytes) // max(1, advisory))))
     if target == cur:
         yield

@@ -1,13 +1,15 @@
-"""Property tests for the round-11 kernels (CCNet paragraph dedup, threshold
-buckets, DoReMi-lite), checked against independent driver-side brute-force
-reimplementations over hypothesis-generated inputs — the test_properties.py
-discipline."""
+"""Property tests for the dedup and data-selection kernels (CCNet paragraph
+dedup and perplexity buckets, DoReMi-lite weights, any-length maximal
+repeats, the block-capped embedding near-dup kernel), checked against
+independent driver-side brute-force reimplementations or the uncapped kernel
+over hypothesis-generated inputs — the test_properties.py discipline."""
 
 import math
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from srm_etl_spark.operators.dedup import maximal_repeat_spans
 from srm_etl_spark.operators.doremi import doremi_weights
 from srm_etl_spark.pipelines.ccnet import paragraph_dedup, perplexity_buckets
 
@@ -21,7 +23,7 @@ _SETTINGS = dict(
 # windows instead of unique-everything corpora
 _tok = st.sampled_from(["a", "b", "c"])
 _doc = st.lists(_tok, min_size=0, max_size=12)
-_corpus = st.lists(_doc, min_size=1, max_size=6)
+_para_corpus = st.lists(_doc, min_size=1, max_size=6)
 
 _CHUNK = 4
 
@@ -43,7 +45,7 @@ def _ref_paragraph_dedup(token_lists, chunk=_CHUNK):
     return out
 
 
-@given(corpus=_corpus)
+@given(corpus=_para_corpus)
 @settings(**_SETTINGS)
 def test_paragraph_dedup_matches_bruteforce(spark, corpus):
     docs = spark.createDataFrame(
@@ -159,3 +161,97 @@ def test_doremi_matches_bruteforce(spark, rows):
         assert abs(got[d]["excess"] - excess) <= 3e-4
         assert abs(got[d]["weight"] - weight) <= 5e-4
     assert abs(sum(r["weight"] for r in got.values()) - 1.0) <= 1e-5
+
+
+# longer documents so any-length repeats reach past the window threshold
+_repeat_corpus = st.lists(st.lists(_tok, min_size=0, max_size=14), min_size=1, max_size=6)
+
+_L = 3  # window threshold for the property runs
+
+
+def _ref_maximal_repeats(token_lists, L=_L):
+    """Brute force: every substring occurrence of every length >= L, counted
+    corpus-wide; per position the max duplicated length; spans = maximal
+    runs of marked window starts."""
+    occ_count: dict[tuple, int] = {}
+    for toks in token_lists:
+        n = len(toks)
+        for s in range(n):
+            for e in range(s + L, n + 1):
+                occ_count[tuple(toks[s:e])] = occ_count.get(tuple(toks[s:e]), 0) + 1
+    out = {}
+    for did, toks in enumerate(token_lists):
+        n = len(toks)
+        duplen = {}
+        for s in range(n - L + 1):
+            best = 0
+            for e in range(s + L, n + 1):
+                if occ_count[tuple(toks[s:e])] >= 2:
+                    best = e - s
+            if best:
+                duplen[s + 1] = best  # 1-based start
+        # runs of consecutive marked starts
+        starts = sorted(duplen)
+        runs, cur = [], []
+        for s in starts:
+            if cur and s == cur[-1] + 1:
+                cur.append(s)
+            else:
+                if cur:
+                    runs.append(cur)
+                cur = [s]
+        if cur:
+            runs.append(cur)
+        for run in runs:
+            out[(did, run[0])] = (
+                run[-1] + L - 1,            # span_end
+                len(run),                    # n_windows
+                max(duplen[s] for s in run),  # max_repeat_tokens
+            )
+    return out
+
+
+@settings(**_SETTINGS)
+@given(_repeat_corpus)
+def test_maximal_repeats_match_bruteforce(spark, corpus):
+    df = spark.createDataFrame(
+        [(i, " ".join(toks)) for i, toks in enumerate(corpus)],
+        "doc_id long, text string",
+    )
+    got = {
+        (r.doc_id, r.span_start): (r.span_end, r.n_windows, r.max_repeat_tokens)
+        for r in maximal_repeat_spans(df, "text", "doc_id", min_tokens=_L).collect()
+    }
+    assert got == _ref_maximal_repeats(corpus)
+
+
+_vec = st.lists(
+    st.floats(min_value=-1, max_value=1, allow_nan=False, width=32),
+    min_size=4,
+    max_size=4,
+)
+
+
+@settings(**_SETTINGS)
+@given(st.lists(_vec, min_size=2, max_size=20), st.integers(min_value=1, max_value=4))
+def test_embedding_block_cap_invariant(spark, vecs, cap):
+    # capped kernel == uncapped kernel for EVERY corpus and EVERY cap,
+    # including caps of 1 (every row its own sub-block)
+    from srm_etl_spark.operators.dedup import embedding_near_dup_pairs_arrow as kern
+
+    df = spark.createDataFrame(
+        [(i, i % 2, v) for i, v in enumerate(vecs)],
+        "vec_id long, label int, embedding array<double>",
+    )
+    plain = {
+        (r.left_id, r.right_id)
+        for r in kern(df, "embedding", "vec_id", threshold=0.3, block_col="label").collect()
+    }
+    capped = {
+        (r.left_id, r.right_id)
+        for r in kern(
+            df, "embedding", "vec_id", threshold=0.3, block_col="label",
+            max_block_size=cap,
+        ).collect()
+    }
+    assert plain == capped

@@ -1,8 +1,7 @@
-"""Property tests for the round-13 kernels: the two card_data_full rs/mode
-formulations (joined vs per_row) must agree on EVERY corpus — including the
-shapes the fixtures never produce (duplicate situation ids within one card,
-empty/NULL id arrays, responses without a category separator) — and the
-block-capped embedding kernel must equal the uncapped one for every cap.
+"""Property tests for the two card_data_full rs/mode formulations (joined vs
+per_row): they must agree on EVERY corpus — including the shapes the
+fixtures never produce (duplicate situation ids within one card, empty/NULL
+id arrays, responses without a category separator).
 
 The test drives the formulations through a minimal flat_table-shaped frame
 (only the columns the rs/mode legs read) so hypothesis examples stay tiny.
@@ -10,7 +9,6 @@ The test drives the formulations through a minimal flat_table-shaped frame
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -38,7 +36,7 @@ _resp = st.sampled_from(
 _sit = st.sampled_from(
     ["human_situations:age:youth", "human_situations:lang:arabic", "human_situations:age:old"]
 )
-# arrays may carry NULL ELEMENTS (not just be NULL): the r13 ADVICE
+# arrays may carry NULL ELEMENTS (not just be NULL): an earlier
 # divergence was per_row's array_position(col, NULL) -> NULL tie-break vs
 # joined's real min position — generate them so the parity tests reach it
 _resp_arr = st.one_of(
@@ -125,35 +123,3 @@ def test_per_row_fallback_threshold_matches(spark, corpus):
     assert sorted(map(tuple, fb.select(_RS_COLS).collect())) == sorted(
         map(tuple, jd.select(_RS_COLS).collect())
     )
-
-
-_vec = st.lists(
-    st.floats(min_value=-1, max_value=1, allow_nan=False, width=32),
-    min_size=4,
-    max_size=4,
-)
-
-
-@settings(**_SETTINGS)
-@given(st.lists(_vec, min_size=2, max_size=20), st.integers(min_value=1, max_value=4))
-def test_embedding_block_cap_invariant(spark, vecs, cap):
-    # capped kernel == uncapped kernel for EVERY corpus and EVERY cap,
-    # including caps of 1 (every row its own sub-block)
-    from srm_etl_spark.operators.dedup import embedding_near_dup_pairs_arrow as kern
-
-    df = spark.createDataFrame(
-        [(i, i % 2, v) for i, v in enumerate(vecs)],
-        "vec_id long, label int, embedding array<double>",
-    )
-    plain = {
-        (r.left_id, r.right_id)
-        for r in kern(df, "embedding", "vec_id", threshold=0.3, block_col="label").collect()
-    }
-    capped = {
-        (r.left_id, r.right_id)
-        for r in kern(
-            df, "embedding", "vec_id", threshold=0.3, block_col="label",
-            max_block_size=cap,
-        ).collect()
-    }
-    assert plain == capped
