@@ -93,8 +93,8 @@ _WINDOW = [
 
 
 def _rank(name: str) -> float:
-    """Order after the window: by query number, except that q148 keeps its
-    historical slot right after q149."""
+    """Order after the window: by query number, except that q148 stays right
+    after q149, the slot it has in every earlier registry listing."""
     return 149.5 if name == "q148_mp4_keyframes" else int(name[1:name.index("_")])
 
 
